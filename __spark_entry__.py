@@ -1692,8 +1692,8 @@ def _url_curation_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-substitutes the uri alias into the operators' null-split filters
     # (several copies), and the array form codegens ~4x smaller per copy
     # — with when-chains the url_curation stage blew Janino's 64 KB
-    # method limit and silently fell back to interpreted eval (r16
-    # check.err).  Same strings, same oracle.
+    # method limit and silently fell back to interpreted eval.  Same
+    # strings, same oracle.
     scheme = F.element_at(
         F.array(F.lit("http"), F.lit("HTTPS"), F.lit("ftp")),
         ((i % 3) + 1).cast("int"),

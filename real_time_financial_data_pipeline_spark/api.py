@@ -39,13 +39,12 @@ def ingest(
     layer: str = "bronze",
 ) -> dict[str, Any]:
     """POST /api/ingest — append an already-parsed connector DataFrame to
-    bronze.  The reference's async BackgroundTasks path maps to the
-    streaming ingester (streaming/ingest.py); this is the sync path, and it
-    reports the true record count (the reference reports only the last
-    symbol's, routes.py:46-72)."""
+    ``layer`` (bronze by default) in one pass, and report every record the
+    write landed as ``records_count`` (the reference reports only the last
+    symbol's, routes.py:46-72).  The async counterpart is the streaming
+    ingester (streaming/ingest.py)."""
     name = dataset_name(source, data_type)
-    n = df.count()
-    path = lake.save(df, name, layer)
+    path, n = lake.save(df, name, layer)
     return {
         "request_id": str(uuid.uuid4()),
         "status": "success",

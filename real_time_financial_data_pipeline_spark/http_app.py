@@ -83,6 +83,7 @@ class _Handler(BaseHTTPRequestHandler):
     # injected by serve(): lake, fetch_fn
     lake: DataLake
     fetch_fn: Callable[[DataIngestionRequest], DataFrame] | None
+    _body: bytes  # the request body, read by _route before any answer
 
     protocol_version = "HTTP/1.1"
 
@@ -117,12 +118,10 @@ class _Handler(BaseHTTPRequestHandler):
         self._respond(status, body, "application/json")
 
     def _body_json(self) -> Any:
-        n = int(self.headers.get("Content-Length") or 0)
-        raw = self.rfile.read(n) if n else b""
-        if not raw:
+        if not self._body:
             return {}
         try:
-            return json.loads(raw)
+            return json.loads(self._body)
         except json.JSONDecodeError as e:
             raise EnvelopeError(
                 [{"loc": ["body"], "msg": f"invalid JSON: {e.msg}", "type": "value_error.json"}]
@@ -130,8 +129,8 @@ class _Handler(BaseHTTPRequestHandler):
 
     # -- routing -----------------------------------------------------------
 
-    def do_OPTIONS(self) -> None:  # CORS preflight
-        self._respond(204, b"", "text/plain")
+    def do_OPTIONS(self) -> None:
+        self._route("OPTIONS")
 
     def do_GET(self) -> None:
         self._route("GET")
@@ -146,6 +145,12 @@ class _Handler(BaseHTTPRequestHandler):
         url = urlparse(self.path)
         path, q = url.path.rstrip("/") or "/", parse_qs(url.query)
         try:
+            # consume the body before any answer: on a keep-alive connection
+            # an unread body would be parsed as the next request
+            n = int(self.headers.get("Content-Length") or 0)
+            self._body = self.rfile.read(n) if n > 0 else b""
+            if method == "OPTIONS":  # CORS preflight
+                return self._respond(204, b"", "text/plain")
             layer = q.get("layer", ["bronze"])[0]
             try:
                 limit = int(q["limit"][0]) if "limit" in q else None

@@ -20,15 +20,23 @@ The filename codec is kept at the path-naming layer for API parity.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import os
 import re
 import shutil
+import uuid
+from collections.abc import Iterator
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LAYERS = ("bronze", "silver", "gold")
+
+# Every write is staged in a sibling of its table named ``<table>.__<what>__``
+# (see ``_swapped_in`` and ``DataLake.save``); listings skip them.
+_SCRATCH_RE = re.compile(r"\.__\w+__$")
 
 # Dataset names come from the filename codec below — word chars, dots and
 # dashes only.  Anything else (path separators, '', '.', '..') is rejected
@@ -65,6 +73,54 @@ def parse_dataset_name(name: str) -> dict[str, str]:
     return {"source": parts[0] if parts else "", "data_type": "", "date": ""}
 
 
+def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> int:
+    """Write ``df`` as parquet into the new directory ``path`` and return
+    the rows written, summed from the footers of the files the write made:
+    a metadata read on the driver, not a second evaluation of ``df``.
+
+    Not a ``DataFrame.observe`` counter: in PySpark 4.1 an ``Observation``
+    sets the session's non-serializable ``observationManager``, and every
+    later task whose closure holds the session then fails to serialize
+    (``pyspark.ml`` ``LogisticRegressionModel.transform``, for one)."""
+    df.write.mode("error").partitionBy(*(partition_by or [])).parquet(path)
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
+
+
+def _parquet_files(path: str) -> list[str]:
+    return [os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")]
+
+
+@contextlib.contextmanager
+def _swapped_in(path: str) -> Iterator[str]:
+    """Yield a staging dir for a full rewrite of the table at ``path``.  If
+    the body leaves it in place, it replaces the table by rename, so readers
+    never see a half-written table; if the body removes it, the table stays
+    as it was.  Every failure window leaves a complete copy on disk."""
+    tmp, old = path + ".__compacting__", path + ".__precompact__"
+    # a swap that died part-way: `old` without `path` died between the
+    # renames, so restore it; `old` beside `path` only missed its cleanup.
+    # A leftover `tmp` is an unfinished rewrite either way.
+    if os.path.isdir(old):
+        if os.path.isdir(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)
+    try:
+        yield tmp
+        if os.path.isdir(tmp):
+            if os.path.isdir(path):
+                os.rename(path, old)
+            os.rename(tmp, path)
+            if os.path.isdir(old):
+                shutil.rmtree(old)
+    finally:
+        # a `tmp` beside `old` is the recovery copy of a died swap: keep it
+        if os.path.isdir(tmp) and not os.path.isdir(old):
+            shutil.rmtree(tmp)
+
+
 class DataLake:
     """Layered parquet lake with a directory-per-table layout."""
 
@@ -93,17 +149,36 @@ class DataLake:
         layer: str = "bronze",
         mode: str = "append",
         partition_by: list[str] | None = None,
-    ) -> str:
-        """Write a dataset table.  Default append + ``ingest_date`` partition
-        column so repeated micro-ingests accumulate without rewrites and
-        date filters prune at the file level."""
+    ) -> tuple[str, int]:
+        """Write a dataset table and return ``(path, rows written)``.
+        Default append + ``ingest_date`` partition column so repeated
+        micro-ingests accumulate without rewrites and date filters prune at
+        the file level.  ``overwrite`` writes a staged copy and swaps it in;
+        ``append`` writes a staged copy and moves its files in.  A write of
+        zero rows changes nothing."""
         path = self._path(layer, name)
         out = df
         if "ingest_date" not in df.columns:
             out = df.withColumn("ingest_date", F.current_date())
         partition_by = partition_by or ["ingest_date"]
-        out.write.mode(mode).partitionBy(*partition_by).parquet(path)
-        return path
+        if mode == "overwrite":
+            with _swapped_in(path) as tmp:
+                rows = write_parquet(out, tmp, partition_by)
+                if rows == 0:
+                    shutil.rmtree(tmp)
+            return path, rows
+        if mode != "append":
+            raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+        # a staging dir of its own keeps this append's files, and so its
+        # count, apart from concurrent appends to the same table
+        staged = f"{path}.__appending_{uuid.uuid4().hex}__"
+        try:
+            rows = write_parquet(out, staged, partition_by)
+            if rows:  # move, not copy, the staged files into the table
+                shutil.copytree(staged, path, copy_function=os.replace, dirs_exist_ok=True)
+        finally:
+            shutil.rmtree(staged, ignore_errors=True)
+        return path, rows
 
     # -- S8: read (storage.py:86-118) --------------------------------------
     def read(self, name: str, layer: str = "bronze") -> DataFrame:
@@ -126,29 +201,35 @@ class DataLake:
         for lay in layers:
             base = os.path.join(self.root, lay)
             out[lay] = sorted(
-                d for d in os.listdir(base) if os.path.isdir(os.path.join(base, d))
+                d
+                for d in os.listdir(base)
+                if os.path.isdir(os.path.join(base, d)) and not _SCRATCH_RE.search(d)
             ) if os.path.isdir(base) else []
         return out
 
     # -- C2: dataset info (helpers.py:84-177, storage.py:51-83) ------------
     def dataset_info(self, name: str, layer: str = "bronze") -> dict:
-        """Metadata introspection: schema from footer, count, date range,
-        capped distinct symbols — single metadata-cheap Spark job each
-        (count(*) and min/max come from parquet footers via pushdown)."""
+        """Metadata introspection: schema from the parquet footers; record
+        count and date range from one aggregate over the table; up to 50
+        sorted distinct symbols (plus a ``...`` sentinel) from a second,
+        capped query."""
         df = self.read(name, layer)
         fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
         date_col = next((c for c in ("timestamp", "ts", "date", "datetime") if c in fields), None)
         sym_col = next((c for c in ("symbol", "ticker", "stock", "name") if c in fields), None)
+        aggs = [F.count(F.lit(1)).alias("n")]
+        if date_col:
+            aggs += [F.min(date_col).alias("lo"), F.max(date_col).alias("hi")]
+        stats = df.agg(*aggs).first()
         info: dict = {
             "name": name,
             "layer": layer,
             "schema": fields,
-            "record_count": df.count(),
+            "record_count": stats["n"],
             **parse_dataset_name(name),
         }
         if date_col:
-            rng = df.agg(F.min(date_col).alias("lo"), F.max(date_col).alias("hi")).first()
-            info["first_date"], info["last_date"] = rng["lo"], rng["hi"]
+            info["first_date"], info["last_date"] = stats["lo"], stats["hi"]
         if sym_col:
             # cap at 50 + sentinel, like helpers.py:152-153
             syms = [r[0] for r in df.select(sym_col).distinct().orderBy(sym_col).limit(51).collect()]
@@ -213,61 +294,25 @@ class DataLake:
         volume; periodic compaction is the standard fix).
 
         ``repartition(*partition_by)`` hash-routes every partition value to
-        exactly one task, so the rewrite emits one file per directory.  The
-        rewrite lands in a temp dir and swaps in with a rename, so readers
-        never see a half-written table; row count is verified before the
-        swap and the temp dir is cleaned up on failure.
+        exactly one task, so the rewrite emits one file per directory.  It
+        swaps in through ``_swapped_in`` once its row count, read back from
+        the written files' footers, matches the table's.
         """
         path = self._path(layer, name)
-        tmp = path + ".__compacting__"
-        old = path + ".__precompact__"
-        # recover from a previous compaction that died mid-swap: `old` with
-        # no `path` means the first rename landed but the second didn't —
-        # restore the original; `old` alongside `path` means only the final
-        # cleanup was missed — drop the stale copy.  A leftover `tmp` is an
-        # unfinished rewrite either way.
-        if os.path.isdir(old):
-            if os.path.isdir(path):
-                shutil.rmtree(old)
-            else:
-                os.rename(old, path)
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        df = self.spark.read.parquet(path)
-        partition_by = partition_by or (
-            ["ingest_date"] if "ingest_date" in df.columns else None
-        )
-        n_before = df.count()
-        files_before = sum(
-            len([f for f in fs if f.endswith(".parquet")])
-            for _, _, fs in os.walk(path)
-        )
-        try:
+        with _swapped_in(path) as tmp:
+            df = self.spark.read.parquet(path)
+            partition_by = partition_by or (
+                ["ingest_date"] if "ingest_date" in df.columns else None
+            )
+            n_before = df.count()
+            files_before = len(_parquet_files(path))
             out = df.repartition(*partition_by) if partition_by else df.coalesce(1)
-            writer = out.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(tmp)
-            n_after = self.spark.read.parquet(tmp).count()
+            n_after = write_parquet(out, tmp, partition_by)  # from the landed footers
             if n_after != n_before:
                 raise RuntimeError(
                     f"compaction row drift: {n_before} -> {n_after}; aborting swap"
                 )
-            # rename-based swap: every failure window leaves a complete copy
-            # on disk (either at path, or at old with tmp ready) — never
-            # rmtree the only copy before the replacement is in place
-            os.rename(path, old)
-            os.rename(tmp, path)
-            shutil.rmtree(old)
-        finally:
-            # clean the rewrite only if the table is still present; if the
-            # swap died mid-way, tmp/old are the recovery copies — keep them
-            if os.path.isdir(tmp) and os.path.isdir(path):
-                shutil.rmtree(tmp)
-        files_after = sum(
-            len([f for f in fs if f.endswith(".parquet")])
-            for _, _, fs in os.walk(path)
-        )
+        files_after = len(_parquet_files(path))
         return {
             "rows": n_before,
             "files_before": files_before,

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from ..streaming.ingest import start_foreach_batch
 from .similarity import (
     _adc_score,
     hash_sample,
@@ -265,10 +266,4 @@ def stream_search(
             )
             out.write.mode("append").parquet(sink_path)
 
-    writer = (
-        query_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(query_stream, _process, checkpoint, trigger_available_now)

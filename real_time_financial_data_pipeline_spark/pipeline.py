@@ -2,10 +2,11 @@
 (transformers.py:145-214), the flagship end-to-end slice.
 
 Reads a lake table, dispatches on transformation_type
-(clean | normalize | aggregate), writes the result to the destination layer,
-returns a result summary.  Each transform is a pure DataFrame function, so
-lineage is the lazy logical plan and Catalyst fuses the read-transform-write
-pipeline into minimal stages.
+(clean | normalize | aggregate), overwrites the destination table with the
+result and returns a result summary.  Each transform is a pure DataFrame
+function, so the read-transform-write slice is one lazy plan that runs once:
+the write itself counts the rows it lands, and an empty result leaves the
+destination as it was.
 """
 
 from __future__ import annotations
@@ -63,15 +64,14 @@ def transform_pipeline(
     df = lake.read(source_name, source_layer)
     out = apply_transform(df, kind, params)
 
-    n = out.count()
-    if n == 0:
-        # reference errors on empty output (transformers.py:188-193)
-        return {"status": "error", "message": "transformation produced no data", "records_count": 0}
-
     if dest_name is None:
         parts = parse_dataset_name(source_name)
         dest_name = f"{parts['source']}_{parts['data_type']}_{_SUFFIX[kind]}"
-    path = lake.save(out, dest_name, dest_layer, mode="overwrite")
+    path, n = lake.save(out, dest_name, dest_layer, mode="overwrite")
+    if n == 0:
+        # reference errors on empty output (transformers.py:188-193); the
+        # empty overwrite has left the destination untouched
+        return {"status": "error", "message": "transformation produced no data", "records_count": 0}
     return {
         "status": "success",
         "message": f"{kind} applied to {source_name}",

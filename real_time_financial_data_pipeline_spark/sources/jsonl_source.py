@@ -201,6 +201,7 @@ def stream_documents_jsonl(
     started StreamingQuery."""
     from real_time_financial_data_pipeline_spark.streaming.ingest import (
         split_by_rules,
+        start_foreach_batch,
     )
 
     reader = spark.readStream.schema(StructType(_RAW_FIELDS)).option(
@@ -224,9 +225,4 @@ def stream_documents_jsonl(
         finally:
             batch_df.unpersist()
 
-    writer = normalized.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(normalized, write_batch, checkpoint, trigger_available_now)

@@ -44,24 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.crawl_graph import host_graph, merge_host_graphs
-from .sketches import _list_versions
-
-
-def latest_snapshot(
-    spark: SparkSession, path: str, below: int | None = None
-) -> tuple[int, DataFrame] | None:
-    """(version, table) of the newest snapshot under a versioned fold
-    path — optionally the newest STRICTLY BELOW ``below`` (the
-    replay-safe read the folds themselves use), or None before the
-    first fold.  Shared by every non-idempotent additive fold in this
-    module (edge weights, anchor-term counts)."""
-    versions = _list_versions(spark, path)
-    if below is not None:
-        versions = [v for v in versions if v < below]
-    if not versions:
-        return None
-    v = versions[-1]
-    return v, spark.read.parquet(f"{path}/v={v}")
+from .ingest import start_foreach_batch
+from .sketches import _commit_version, latest_snapshot
 
 
 def latest_graph_snapshot(
@@ -110,28 +94,8 @@ def _make_versioned_additive_folder(
             return
         prev = latest_snapshot(spark, path, below=batch_id)
         merged = table if prev is None else merge(prev[1], table)
-        # stage-and-rename, exactly the KMV fold's crash-replay rule: the
-        # read (possibly of v=n under replay-adjacent listings) completes
-        # against old files while the write targets staging; the swap is
-        # two metadata ops and a crash loses only v=n itself
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/_staging_v{batch_id}")
-        final = jvm.org.apache.hadoop.fs.Path(f"{path}/v={batch_id}")
-        fs = final.getFileSystem(conf)
         out = merged if n_files is None else merged.coalesce(n_files)
-        out.write.mode("overwrite").parquet(str(tmp))
-        if fs.exists(final):
-            fs.delete(final, True)
-        if not fs.rename(tmp, final):
-            raise IOError(
-                f"additive fold: rename {tmp} -> {final} failed; snapshot "
-                f"v={batch_id} not committed (staging left for inspection)"
-            )
-        if keep_versions is not None:
-            for old in _list_versions(spark, path)[:-keep_versions]:
-                p = jvm.org.apache.hadoop.fs.Path(f"{path}/v={old}")
-                p.getFileSystem(conf).delete(p, True)
+        _commit_version(spark, path, batch_id, out, keep_versions)
 
     return fold_batch
 
@@ -222,14 +186,9 @@ def stream_host_graph_fold(
     fold = make_graph_folder(
         graph_path, src, dst, extra_suffixes, keep_versions, n_files
     )
-    writer = links.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint
+    return start_foreach_batch(
+        links, fold, checkpoint, trigger_available_now, processing_time
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def stream_anchor_counts_fold(
@@ -259,11 +218,6 @@ def stream_anchor_counts_fold(
         counts_path, dst, text_col, extra_suffixes, stopwords,
         keep_versions, n_files,
     )
-    writer = links.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint
+    return start_foreach_batch(
+        links, fold, checkpoint, trigger_available_now, processing_time
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

@@ -79,6 +79,24 @@ def kafka_stream(
     return decode_kafka_values(reader.load(), value_schema)
 
 
+def start_foreach_batch(
+    stream: DataFrame,
+    write_batch: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    trigger_available_now: bool = False,
+    processing_time: str | None = None,
+) -> StreamingQuery:
+    """Start ``stream`` into the foreachBatch body ``write_batch`` under a
+    checkpoint: ``availableNow`` drains the backlog then stops, otherwise
+    micro-batches run on ``processing_time`` (or as fast as data comes)."""
+    writer = stream.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint)
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
 def dedup_stream(
     stream: DataFrame,
     key_cols: list[str],
@@ -116,18 +134,22 @@ def make_batch_writer(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         out = transform(batch_df) if transform else batch_df
-        if exactly_once:
-            (
-                out.withColumn("_batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_batch_id")
-                .parquet(bronze_path)
-            )
-        else:
-            out.write.mode("append").parquet(bronze_path)
+        _write_batch(out, bronze_path, batch_id, exactly_once)
 
     return write_batch
+
+
+def _write_batch(out: DataFrame, path: str, batch_id: int, exactly_once: bool) -> None:
+    if exactly_once:
+        (
+            out.withColumn("_batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_batch_id")
+            .parquet(path)
+        )
+    else:
+        out.write.mode("append").parquet(path)
 
 
 def ingest_to_bronze(
@@ -145,12 +167,9 @@ def ingest_to_bronze(
     upgrades the sink from at-least-once appends to idempotent
     batch-id-keyed partition overwrites (see ``make_batch_writer``)."""
     write_batch = make_batch_writer(bronze_path, transform, exactly_once)
-    writer = stream.writeStream.foreachBatch(write_batch).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return start_foreach_batch(
+        stream, write_batch, checkpoint, trigger_available_now, processing_time
+    )
 
 
 def split_by_rules(df: DataFrame, rules) -> tuple[DataFrame, DataFrame]:
@@ -194,17 +213,8 @@ def make_quarantine_writer(
         batch_df.persist()
         try:
             good, bad = split_by_rules(batch_df, rules)
-            for out, path in ((good, good_path), (bad, quarantine_path)):
-                if exactly_once:
-                    (
-                        out.withColumn("_batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("_batch_id")
-                        .parquet(path)
-                    )
-                else:
-                    out.write.mode("append").parquet(path)
+            _write_batch(good, good_path, batch_id, exactly_once)
+            _write_batch(bad, quarantine_path, batch_id, exactly_once)
         finally:
             batch_df.unpersist()
 
@@ -227,11 +237,6 @@ def ingest_with_quarantine(
     write_batch = make_quarantine_writer(
         good_path, quarantine_path, rules, exactly_once
     )
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
+    return start_foreach_batch(
+        stream, write_batch, checkpoint, trigger_available_now, processing_time
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

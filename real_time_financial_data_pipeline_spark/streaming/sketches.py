@@ -51,6 +51,7 @@ from ..operators.sketches import (
     kmv_sketch,
     merge_kmv_tables,
 )
+from .ingest import start_foreach_batch
 
 _VERSION_RE = re.compile(r"^v=(\d+)$")
 
@@ -73,17 +74,62 @@ def _list_versions(spark: SparkSession, sketch_path: str) -> list[int]:
     return sorted(versions)
 
 
+def _commit_version(
+    spark: SparkSession, path: str, batch_id: int, out: DataFrame, keep_versions: int | None
+) -> None:
+    """Land ``out`` as snapshot ``v=<batch_id>`` under ``path``, then keep
+    only the newest ``keep_versions`` snapshots (all when None).
+
+    CRASH-REPLAY SAFETY: a replayed fold may read v=n while writing v=n —
+    a direct overwrite deletes the lazy scan's input files mid-job
+    (whether it fails or silently corrupts depends on which stages
+    materialized first).  Stage-and-rename instead: the read completes
+    against the old files while the write targets a staging dir, then the
+    swap is two metadata ops.  A crash between delete and rename only
+    loses v=n itself, which the next replay rebuilds — never a corrupt or
+    half-written snapshot."""
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/_staging_v{batch_id}")
+    final = jvm.org.apache.hadoop.fs.Path(f"{path}/v={batch_id}")
+    fs = final.getFileSystem(conf)
+    out.write.mode("overwrite").parquet(str(tmp))
+    if fs.exists(final):
+        fs.delete(final, True)
+    if not fs.rename(tmp, final):  # Hadoop rename signals by return value
+        raise IOError(
+            f"fold: rename {tmp} -> {final} failed; snapshot v={batch_id} "
+            "not committed (staging left in place for inspection)"
+        )
+    if keep_versions is not None:
+        for old in _list_versions(spark, path)[:-keep_versions]:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/v={old}"), True)
+
+
+def latest_snapshot(
+    spark: SparkSession, path: str, below: int | None = None
+) -> tuple[int, DataFrame] | None:
+    """(version, table) of the newest snapshot under a versioned fold
+    path — optionally the newest STRICTLY BELOW ``below`` (the
+    replay-safe read the folds themselves use), or None before the
+    first fold.  The KMV fold reads the newest; the non-idempotent
+    additive folds (streaming/crawl_graph.py) read strictly below."""
+    versions = _list_versions(spark, path)
+    if below is not None:
+        versions = [v for v in versions if v < below]
+    if not versions:
+        return None
+    v = versions[-1]
+    return v, spark.read.parquet(f"{path}/v={v}")
+
+
 def latest_kmv_snapshot(
     spark: SparkSession, sketch_path: str
 ) -> tuple[int, DataFrame] | None:
     """(version, sketch table) of the newest snapshot, or None before the
     first fold.  The parquet round trip preserves the ``kmv_k`` column
     metadata, so the returned table satisfies the merge contract."""
-    versions = _list_versions(spark, sketch_path)
-    if not versions:
-        return None
-    v = versions[-1]
-    return v, spark.read.parquet(f"{sketch_path}/v={v}")
+    return latest_snapshot(spark, sketch_path)
 
 
 def make_sketch_folder(
@@ -144,35 +190,7 @@ def make_sketch_folder(
             merged = merge_kmv_tables(
                 prev[1], batch_sketch, keys or None, sketch_col=sketch_col
             )
-        # CRASH-REPLAY SAFETY: a replay of the LATEST batch merges v=n
-        # while writing v=n — a direct overwrite deletes the lazy scan's
-        # input files mid-job (whether it fails or silently corrupts
-        # depends on which stages materialized first).  Stage-and-rename
-        # instead: the read completes against the old files while the
-        # write targets the staging dir, then the swap is two metadata
-        # ops.  A crash between delete and rename only loses v=n itself,
-        # which the next replay rebuilds from v=n-1 — never a corrupt or
-        # half-written snapshot.
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        tmp = jvm.org.apache.hadoop.fs.Path(f"{sketch_path}/_staging_v{batch_id}")
-        final = jvm.org.apache.hadoop.fs.Path(f"{sketch_path}/v={batch_id}")
-        fs = final.getFileSystem(conf)
-        merged.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-        if fs.exists(final):
-            fs.delete(final, True)
-        if not fs.rename(tmp, final):  # Hadoop rename signals by return value
-            raise IOError(
-                f"kmv fold: rename {tmp} -> {final} failed; snapshot v={batch_id} "
-                "not committed (staging left in place for inspection)"
-            )
-        if keep_versions is not None:
-            versions = _list_versions(spark, sketch_path)
-            jvm = spark.sparkContext._jvm
-            conf = spark.sparkContext._jsc.hadoopConfiguration()
-            for old in versions[:-keep_versions]:
-                p = jvm.org.apache.hadoop.fs.Path(f"{sketch_path}/v={old}")
-                p.getFileSystem(conf).delete(p, True)
+        _commit_version(spark, sketch_path, batch_id, merged.coalesce(1), keep_versions)
 
     return fold_batch
 
@@ -199,14 +217,9 @@ def stream_kmv_fold(
     fold = make_sketch_folder(
         sketch_path, value_col, key_cols, k, keep_versions, sample_id_col
     )
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint
+    return start_foreach_batch(
+        stream, fold, checkpoint, trigger_available_now, processing_time
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def read_kmv_trend(

@@ -39,6 +39,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .lake import write_parquet
+
 _MANIFEST_DIR = "_versions"
 _DATA_DIR = "data"
 
@@ -103,7 +105,7 @@ class VersionedTable:
 
     def _write_data_dir(self, version: int, df: DataFrame) -> tuple[str, int]:
         """Write a commit's rows into its ``data/b{N}`` dir and return
-        (rel_dir, row count).  A pre-existing dir at this version number
+        (rel_dir, rows written).  A pre-existing dir at this version number
         is by construction an ORPHAN — its manifest was never written, or
         ``latest_version`` would exceed ``version`` — left by a writer
         that crashed between data write and manifest rename; it is
@@ -113,8 +115,7 @@ class VersionedTable:
         out_dir = os.path.join(self.path, rel_dir)
         if os.path.isdir(out_dir):
             shutil.rmtree(out_dir)
-        df.write.mode("error").parquet(out_dir)
-        return rel_dir, self.spark.read.parquet(out_dir).count()
+        return rel_dir, write_parquet(df, out_dir)
 
     def _lineage(self, parent: int | None, mode: str, rel_dir: str, n_new: int) -> tuple[list[str], int]:
         if mode == "append" and parent is not None:
@@ -156,12 +157,13 @@ class VersionedTable:
         """The snapshot as a DataFrame — latest by default, or any retained
         version (time travel).  Pure metadata resolution, then a vanilla
         multi-dir parquet scan."""
+        return self.spark.read.parquet(*self._snapshot_paths(version))
+
+    def _snapshot_paths(self, version: int | None) -> list[str]:
         v = self.latest_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"no commits at {self.path}")
-        m = self._read_manifest(v)
-        paths = [os.path.join(self.path, d) for d in m["dirs"]]
-        return self.spark.read.parquet(*paths)
+        return [os.path.join(self.path, d) for d in self._read_manifest(v)["dirs"]]
 
     # -- maintenance --------------------------------------------------------
     def vacuum(self, keep_last: int = 1) -> dict:
@@ -220,11 +222,7 @@ class VersionedTable:
         columns over time; ``mergeSchema`` unions the per-commit parquet
         schemas (missing columns read as null).  Costs a footer read per
         file — use plain ``read`` when the schema never evolved."""
-        v = self.latest_version() if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"no commits at {self.path}")
-        m = self._read_manifest(v)
-        paths = [os.path.join(self.path, d) for d in m["dirs"]]
+        paths = self._snapshot_paths(version)
         return self.spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def commit_checked(self, df: DataFrame, rules, mode: str = "append") -> int:

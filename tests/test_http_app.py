@@ -188,3 +188,25 @@ def test_envelope_parsing_unit():
         {"source": "s", "data_type": "stock", "start_date": None},
     )
     assert ok.start_date is None and ok.symbols == []
+
+
+def test_unrouted_body_is_consumed_on_keep_alive(app):
+    """A 404 must read its request body: on a keep-alive connection an
+    unread body would be parsed as a further request."""
+    import socket
+    from urllib.parse import urlparse
+
+    u = urlparse(app)
+    smuggled = b"GET /api/nope HTTP/1.1\r\nHost: x\r\n\r\n"
+    with socket.create_connection((u.hostname, u.port), timeout=30) as s:
+        s.sendall(
+            b"POST /api/nope HTTP/1.1\r\nHost: x\r\n"
+            + f"Content-Length: {len(smuggled)}\r\n\r\n".encode()
+            + smuggled
+            + b"GET /api/nope HTTP/1.1\r\nHost: x\r\nConnection: close\r\n\r\n"
+        )
+        data = b""
+        while chunk := s.recv(65536):
+            data += chunk
+    # responses follow each other without a separator; bodies are JSON
+    assert data.count(b"HTTP/1.1 404 ") == 2

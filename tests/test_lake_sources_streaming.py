@@ -82,6 +82,92 @@ def test_transform_pipeline_requires_data_type_for_normalize(spark, lake):
         transform_pipeline(lake, name, "bronze", "silver", "normalize")
 
 
+def test_transform_pipeline_empty_result_keeps_destination(spark, lake):
+    """An empty transform result answers the reference's error envelope and
+    leaves an existing destination table as it was."""
+    df = parse_alphavantage_daily(spark, AV_PAYLOAD, "AAPL")
+    lake.save(df, "alphavantage_stock_20240101", "bronze")
+    ok = transform_pipeline(
+        lake, "alphavantage_stock_20240101", "bronze", "silver", "clean", dest_name="cleaned"
+    )
+    assert ok["status"] == "success" and ok["records_count"] == 2
+
+    lake.save(df.withColumn("open", F.lit(None).cast("double")), "alphavantage_stock_20240102", "bronze")
+    res = transform_pipeline(
+        lake, "alphavantage_stock_20240102", "bronze", "silver", "clean", dest_name="cleaned"
+    )
+    assert res["status"] == "error" and res["records_count"] == 0
+    assert res["message"] == "transformation produced no data"
+    assert sorted(r.close for r in lake.read("cleaned", "silver").collect()) == [11.0, 12.0]
+
+
+def test_lake_empty_write_changes_nothing(spark, lake):
+    df = parse_alphavantage_daily(spark, AV_PAYLOAD, "AAPL")
+    assert lake.save(df, "t", "gold", mode="overwrite")[1] == 2
+    assert lake.save(df.limit(0), "t", "gold", mode="overwrite")[1] == 0
+    assert lake.save(df.limit(0), "t", "gold")[1] == 0
+    assert lake.read("t", "gold").count() == 2
+    assert lake.save(df.limit(0), "never", "gold", mode="overwrite")[1] == 0
+    assert lake.save(df.limit(0), "never", "gold")[1] == 0
+    assert os.listdir(os.path.join(lake.root, "gold")) == ["t"]
+
+
+def test_lake_write_leaves_session_serializable(spark, lake):
+    """A lake write must not leave state on the session that later task
+    closures holding the session cannot serialize (an ``Observation`` does,
+    and breaks a fitted ``pyspark.ml`` model's ``transform``)."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+
+    df = parse_alphavantage_daily(spark, AV_PAYLOAD, "AAPL")
+    lake.save(df, "t", "gold")
+    feats = VectorAssembler(inputCols=["open", "close"], outputCol="v").transform(
+        df.withColumn("label", (F.col("close") > 11.5).cast("double"))
+    )
+    model = LogisticRegression(featuresCol="v", maxIter=5).fit(feats)
+    assert len(model.transform(feats).select("probability").collect()) == 2
+
+
+def _jobs(spark, group, fn):
+    """Run ``fn`` under a job group; return (its result, Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_each_lake_write_is_one_pass(spark, lake, tmp_path):
+    """Writes count their own rows: an ingest is one job, and a transform
+    runs no more jobs than its frame written on its own."""
+    import uuid
+
+    from real_time_financial_data_pipeline_spark import api
+    from real_time_financial_data_pipeline_spark.operators.clean import clean_data
+
+    tag = uuid.uuid4().hex
+    df = parse_alphavantage_daily(spark, AV_PAYLOAD, "AAPL")
+    res, n_ingest = _jobs(spark, f"ingest-{tag}", lambda: api.ingest(lake, df, "av", "stock"))
+    assert res["records_count"] == 2 and n_ingest == 1
+
+    src = res["dataset"]
+    _, n_alone = _jobs(
+        spark,
+        f"alone-{tag}",
+        lambda: clean_data(lake.read(src)).write.parquet(str(tmp_path / "alone")),
+    )
+    res, n_pipeline = _jobs(
+        spark,
+        f"pipeline-{tag}",
+        lambda: transform_pipeline(lake, src, "bronze", "silver", "clean"),
+    )
+    assert res["status"] == "success" and n_pipeline <= n_alone
+    assert res["records_count"] == lake.read(res["dataset"], "silver").count() == 2
+
+
 def test_connector_parsers(spark):
     fx = parse_alphavantage_forex(
         spark,
