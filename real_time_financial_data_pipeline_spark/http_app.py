@@ -28,6 +28,7 @@ SparkSession job submission is thread-safe, and every response is bounded
 from __future__ import annotations
 
 import json
+import logging
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -50,6 +51,8 @@ from real_time_financial_data_pipeline_spark.lake import (
     validate_dataset_name,
 )
 from real_time_financial_data_pipeline_spark.ui import INDEX_HTML as _INDEX_HTML
+
+log = logging.getLogger(__name__)
 
 
 def _checked_name(name: str) -> str:
@@ -92,8 +95,8 @@ class _Handler(BaseHTTPRequestHandler):
     def log_message(self, fmt: str, *args: Any) -> None:
         # deliberate no-op override: BaseHTTPRequestHandler writes every
         # request line to stderr by default, which floods test output; this
-        # suppresses ACCESS logging only — errors still propagate through
-        # the normal handler paths (nothing is swallowed here)
+        # suppresses ACCESS logging only — every 500 is logged, with its
+        # traceback, in _route
         pass
 
     def _cors(self) -> None:
@@ -116,6 +119,10 @@ class _Handler(BaseHTTPRequestHandler):
     def _json(self, status: int, payload: Any) -> None:
         body = json.dumps(payload, default=_json_default).encode()
         self._respond(status, body, "application/json")
+
+    def _records(self, recs: list[str]) -> None:
+        """Answer a JSON array of the JSON object texts Spark produced."""
+        self._respond(200, ("[" + ",".join(recs) + "]").encode(), "application/json")
 
     def _body_json(self) -> Any:
         if not self._body:
@@ -184,8 +191,7 @@ class _Handler(BaseHTTPRequestHandler):
                     return self._respond(204, b"", "text/plain")
             if m := re.fullmatch(r"/api/data/latest/([^/]+)/([^/]+)", path):
                 if method == "GET":
-                    recs = api.get_latest(self.lake, m.group(1), m.group(2), limit=limit)
-                    return self._json(200, [json.loads(r) for r in recs])
+                    return self._records(api.get_latest(self.lake, m.group(1), m.group(2), limit=limit))
             if m := re.fullmatch(r"/api/data/([^/]+)/([^/]+)/download", path):
                 if method == "GET":
                     lay, name = _checked_layer(m.group(1)), _checked_name(m.group(2))
@@ -199,8 +205,7 @@ class _Handler(BaseHTTPRequestHandler):
             if m := re.fullmatch(r"/api/data/([^/]+)/([^/]+)", path):
                 if method == "GET":
                     lay, name = _checked_layer(m.group(1)), _checked_name(m.group(2))
-                    recs = api.get_data(self.lake, lay, name, limit=limit)
-                    return self._json(200, [json.loads(r) for r in recs])
+                    return self._records(api.get_data(self.lake, lay, name, limit=limit))
             self._json(404, {"detail": "Not Found"})
         except EnvelopeError as e:
             self._json(422, {"detail": e.detail})
@@ -211,6 +216,7 @@ class _Handler(BaseHTTPRequestHandler):
             if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
                 self._json(404, {"detail": str(e).splitlines()[0]})
             else:
+                log.exception("%s %s failed", method, self.path)
                 self._json(500, {"detail": f"{type(e).__name__}: {e}"})
 
     # -- POST handlers -----------------------------------------------------
@@ -293,8 +299,7 @@ class _Handler(BaseHTTPRequestHandler):
                     "type": "value_error",
                 }]
             )
-        recs = to_json_records(out, limit=int(p.get("limit", 100)))
-        self._json(200, [json.loads(r) for r in recs])
+        self._records(to_json_records(out, limit=int(p.get("limit", 100))))
 
 
 def serve(

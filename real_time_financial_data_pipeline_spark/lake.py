@@ -31,6 +31,7 @@ from collections.abc import Iterator
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LAYERS = ("bronze", "silver", "gold")
 
@@ -127,6 +128,8 @@ class DataLake:
     def __init__(self, spark: SparkSession, root: str = "data") -> None:
         self.spark = spark
         self.root = root
+        # table path -> ((st_ino, st_mtime_ns), inferred schema); see `read`
+        self._schemas: dict[str, tuple[tuple[int, int], StructType]] = {}
         for layer in LAYERS:
             os.makedirs(os.path.join(root, layer), exist_ok=True)
 
@@ -182,7 +185,35 @@ class DataLake:
 
     # -- S8: read (storage.py:86-118) --------------------------------------
     def read(self, name: str, layer: str = "bronze") -> DataFrame:
-        return self.spark.read.parquet(self._path(layer, name))
+        """The dataset table as a DataFrame.
+
+        The schema Spark infers (a footer-reading Spark job) is remembered
+        per table directory, keyed by the directory's ``(st_ino,
+        st_mtime_ns)``; while the key holds, the read passes the remembered
+        schema and runs no job.  Files are still listed on every read, so
+        new data is always seen.  The key moves, and the next read infers
+        again, on every write through this lake: an overwrite swaps in a
+        new directory (new inode); an append moves its staged files in and
+        stamps the table directory with the staging directory's mtime; a
+        new partition directory, or a delete and re-create, changes the
+        mtime.  ``delete`` also drops the entry.  Not seen: an out-of-band
+        append with another schema into an EXISTING partition directory;
+        without ``mergeSchema`` an inferring read takes its schema from one
+        arbitrary footer, so that was never reliably seen either.  A
+        missing table falls through to a plain ``spark.read.parquet``,
+        which fails as it does for any missing path."""
+        path = self._path(layer, name)
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
+            return self.spark.read.parquet(path)
+        key = (st.st_ino, st.st_mtime_ns)
+        known = self._schemas.get(path)
+        if known is not None and known[0] == key:
+            return self.spark.read.schema(known[1]).parquet(path)
+        df = self.spark.read.parquet(path)
+        self._schemas[path] = (key, df.schema)
+        return df
 
     def versioned(self, name: str, layer: str = "bronze"):
         """Snapshot-versioned handle for a dataset slot (versioning.py:
@@ -352,6 +383,7 @@ class DataLake:
     # -- K4: delete (storage.py:172-196) ------------------------------------
     def delete(self, name: str, layer: str) -> bool:
         path = self._path(layer, name)
+        self._schemas.pop(path, None)
         if os.path.isdir(path):
             shutil.rmtree(path)
             return True

@@ -980,10 +980,10 @@ def prepare_training_set(
     Caching note (r17, scoped r18): with ``benchmark`` /
     ``benchmark_embeddings`` set, the curated intermediate is persisted
     internally (the decontamination anti-join consumes it twice).  The
-    persist is SCOPED (``operators/cachescope``): the next invocation
-    unpersists this one's barriers, so repeated calls in one session
-    recompute honestly — no clearCache() bookkeeping needed, the same
-    contract as ``dedup.minhash_pairs_between``.
+    persist is SCOPED (``operators/cachescope``): the next invocation,
+    whatever its arguments, unpersists this one's barriers, so repeated
+    calls in one session recompute honestly — no clearCache() bookkeeping
+    needed, the same contract as ``dedup.minhash_pairs_between``.
 
     Dedup runs BEFORE split assignment — the other order leaks near-dups
     across train/test.  When ``benchmark`` is given, documents sharing a
@@ -995,6 +995,10 @@ def prepare_training_set(
     content-hash assignment is a pure projection, recomputing it on the
     chunk rows is identical to joining the doc-level assignment (and free).
     """
+    # every call, with or without a benchmark, batch or streaming, frees
+    # the previous call's barriers: a call that persists nothing must not
+    # plan-match its identical curation ladder into a stale cache
+    cachescope.begin("prepare_training_set")
     if max_per_domain is not None and url_col is None:
         raise ValueError("max_per_domain requires url_col (no domain without a URL)")
     if min_domain_rank is not None and min_domain_rank_quantile is not None:
@@ -1100,7 +1104,6 @@ def prepare_training_set(
         # unpersists this one's barriers, so repeated invocations in one
         # session recompute honestly.
         if not curated.isStreaming:
-            cachescope.begin("prepare_training_set")
             curated = cachescope.register(
                 "prepare_training_set", curated.persist()
             )

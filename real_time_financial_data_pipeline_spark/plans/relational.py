@@ -41,14 +41,17 @@ def _spread_fact(df: DataFrame, *key_cols: str) -> DataFrame:
     fact passes (r18 measured at sf0.1: the order-grain decimal pre-agg
     is 0.99 s against 0.21 s for the bare 3-column scan), and a
     single-file / single-row-group input pins that work to ONE task no
-    matter the core count.  Hash-repartitioning the raw rows by the
-    aggregation key moves the one aggregation exchange BELOW the decimal
-    work: the downstream groupBy on the same key reuses the partitioning
+    matter the core count.  Hash-repartitioning the raw rows by
+    ``key_cols`` puts the decimal work on every core.  When the downstream
+    aggregation groups by the same key, the spread IS its exchange
     (ClusteredDistribution is satisfied by any hash partitioning on the
-    key), so the exchange COUNT is unchanged — the shuffle just carries
-    raw rows instead of pre-aggregated ones, and the decimal updates run
-    on every core.  Keyed repartition also avoids round-robin's
-    sort-before-repartition pass (guide §2.5).
+    key), so the exchange count is unchanged and the shuffle just carries
+    raw rows instead of pre-aggregated ones.  When it groups by another
+    key (``pricing_summary`` spreads by ``l_orderkey`` and groups by
+    returnflag/linestatus), the spread is an EXTRA exchange that shuffles
+    every filtered fact row before the partial aggregate.  Keyed
+    repartition also avoids round-robin's sort-before-repartition pass
+    (guide §2.5).
 
     At warehouse scale the scan already has >= cores partitions and this
     is a no-op: map-side partial aggregation before the exchange is the

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import os
 import sys
 from pathlib import Path
 
@@ -15,7 +16,11 @@ SF0001 = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = get_spark("tests", master="local[8]", shuffle_partitions=4)
+    # at most one task slot per core: on a 4-core host, 8 slots put 8
+    # Python workers on 4 CPUs and the Hypothesis properties ran ~2x slower
+    env = os.environ.get("SPARK_GRAFT_CPUS", "")
+    cores = int(env) if env.isdigit() else (os.cpu_count() or 8)
+    spark = get_spark("tests", master=f"local[{min(8, cores)}]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     yield spark
 

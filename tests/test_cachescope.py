@@ -95,3 +95,33 @@ def test_minhash_pairs_between_rotates_caches(spark):
     minhash_pairs_between(new, corpus, threshold=0.5)
     ids2 = [_builder_identity(f) for f in live1]
     assert all(a != b for a, b in zip(ids1, ids2))
+
+
+def test_prepare_training_set_frees_its_barrier_without_benchmark(spark):
+    """A call without a benchmark persists nothing, yet it still frees the
+    previous call's curation barrier instead of plan-matching into it."""
+    from real_time_financial_data_pipeline_spark.operators.training import (
+        prepare_training_set,
+    )
+
+    bench_text = "the quick brown fox jumps over the lazy dog again tonight"
+    run8 = " ".join(bench_text.split()[:8])
+    corpus = spark.createDataFrame(
+        [
+            (1, f"intro words {run8} trailing content is here now"),
+            (2, "all of the tokens in this document are original and on topic"),
+        ],
+        "doc_id long, text string",
+    )
+    benchmark = spark.createDataFrame([(9, bench_text)], "doc_id long, text string")
+    knobs = dict(min_quality=0.5, chunk_tokens=8, overlap_tokens=0)
+
+    out1 = prepare_training_set(corpus, benchmark=benchmark, **knobs)
+    assert {r.doc_id for r in out1.collect()} == {2}
+    live1 = cachescope.live("prepare_training_set")
+    assert live1 and all(_buffers_loaded(f) for f in live1)
+
+    out2 = prepare_training_set(corpus, **knobs)
+    assert cachescope.live("prepare_training_set") == []
+    assert not any(f.storageLevel.useMemory for f in live1)
+    assert {r.doc_id for r in out2.collect()} == {1, 2}

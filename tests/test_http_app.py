@@ -210,3 +210,26 @@ def test_unrouted_body_is_consumed_on_keep_alive(app):
             data += chunk
     # responses follow each other without a separator; bodies are JSON
     assert data.count(b"HTTP/1.1 404 ") == 2
+
+
+def test_500_is_logged_with_traceback(spark, tmp_path, caplog):
+    """A 500 is answered to the client and logged on the server with its
+    traceback."""
+    import logging
+
+    def broken_fetch(req: DataIngestionRequest):
+        raise RuntimeError("connector down")
+
+    server = serve(DataLake(spark, str(tmp_path / "lake")), port=0, fetch_fn=broken_fetch)
+    base = f"http://127.0.0.1:{server.server_address[1]}"
+    try:
+        with caplog.at_level(logging.ERROR, logger="real_time_financial_data_pipeline_spark.http_app"):
+            with pytest.raises(urllib.error.HTTPError) as ei:
+                _req(base, "/api/ingest", "POST", {"source": "yahoo", "data_type": "stock", "symbols": ["A"]})
+    finally:
+        server.shutdown()
+    assert ei.value.code == 500
+    assert json.loads(ei.value.read())["detail"] == "RuntimeError: connector down"
+    logged = [r for r in caplog.records if r.name == "real_time_financial_data_pipeline_spark.http_app"]
+    assert len(logged) == 1 and "POST /api/ingest" in logged[0].getMessage()
+    assert logged[0].exc_info[0] is RuntimeError

@@ -168,6 +168,57 @@ def test_each_lake_write_is_one_pass(spark, lake, tmp_path):
     assert res["records_count"] == lake.read(res["dataset"], "silver").count() == 2
 
 
+def test_lake_read_sees_schema_changes(spark, lake):
+    """`read` remembers each table's inferred schema; an overwrite, a
+    delete and re-create, and a new partition are all seen by the next
+    read."""
+    import shutil
+
+    from pyspark.sql.types import DateType
+
+    df = parse_alphavantage_daily(spark, AV_PAYLOAD, "AAPL")
+    lake.save(df.select("symbol", "close"), "t", "gold", mode="overwrite")
+    assert lake.read("t", "gold").columns == ["symbol", "close", "ingest_date"]
+
+    lake.save(df.select("symbol", "open", "volume"), "t", "gold", mode="overwrite")
+    assert lake.read("t", "gold").columns == ["symbol", "open", "volume", "ingest_date"]
+
+    assert lake.delete("t", "gold")
+    lake.save(df.select("close"), "t", "gold")
+    assert lake.read("t", "gold").columns == ["close", "ingest_date"]
+
+    # removed behind the lake's back, then re-created with another schema
+    shutil.rmtree(os.path.join(lake.root, "gold", "t"))
+    lake.save(df.select("symbol"), "t", "gold")
+    assert lake.read("t", "gold").columns == ["symbol", "ingest_date"]
+
+    day = F.to_date(F.lit("2024-01-01"))
+    lake.save(df.withColumn("ingest_date", day), "p", "bronze")
+    before = lake.read("p", "bronze")
+    lake.save(df.withColumn("ingest_date", F.date_add(day, 1)), "p", "bronze")
+    after = lake.read("p", "bronze")
+    assert before.count() == 2 and after.count() == 4
+    assert after.schema == before.schema and after.schema["ingest_date"].dataType == DateType()
+    assert sorted(str(r.ingest_date) for r in after.select("ingest_date").distinct().collect()) == [
+        "2024-01-01", "2024-01-02"
+    ]
+
+
+def test_repeated_read_skips_schema_inference(spark, lake):
+    """A second read of an unchanged table runs one Spark job fewer than
+    the first: the footer-inference job."""
+    import uuid
+
+    from real_time_financial_data_pipeline_spark import api
+
+    tag = uuid.uuid4().hex
+    lake.save(parse_alphavantage_daily(spark, AV_PAYLOAD, "AAPL"), "t", "gold")
+    first, n_first = _jobs(spark, f"first-{tag}", lambda: api.get_data(lake, "gold", "t", limit=10))
+    second, n_second = _jobs(spark, f"second-{tag}", lambda: api.get_data(lake, "gold", "t", limit=10))
+    assert second == first and len(first) == 2
+    assert n_second == n_first - 1
+
+
 def test_connector_parsers(spark):
     fx = parse_alphavantage_forex(
         spark,
@@ -216,6 +267,47 @@ def test_sinks_sanitize_iso_json_csv(spark):
     assert timestamps_to_iso(df).collect()[0].ts == "2024-01-02T03:04:05.000000Z"
     assert to_json_records(df) == ['{"id":1,"v":null,"ts":"2024-01-02T03:04:05.000000Z"}']
     assert to_csv_string(df).splitlines()[1].startswith("1,,2024-01-02T03:04:05")
+
+
+def test_sinks_quote_column_names(spark):
+    """Names with a dot, a space or a backtick (a CSV header such as
+    ``Adj. Close``) are columns, not struct accesses; NaN and +-inf become
+    null in float and double columns alike."""
+    import datetime as dt
+
+    from pyspark.sql.types import DoubleType, FloatType, StringType, StructField, StructType, TimestampType
+
+    nan, inf = float("nan"), float("inf")
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5, 500000)
+    schema = StructType([
+        StructField("a.b", DoubleType()),
+        StructField("x y", FloatType()),
+        StructField("ts", TimestampType()),
+        StructField("q`t", StringType()),
+    ])
+    df = spark.createDataFrame(
+        [(nan, inf, ts, "p"), (inf, -inf, None, None), (-inf, nan, ts, "r"), (1.5, 2.5, None, "s")], schema
+    )
+    assert to_json_records(df) == [
+        '{"a.b":null,"x y":null,"ts":"2024-01-02T03:04:05.500000Z","q`t":"p"}',
+        '{"a.b":null,"x y":null,"ts":null,"q`t":null}',
+        '{"a.b":null,"x y":null,"ts":"2024-01-02T03:04:05.500000Z","q`t":"r"}',
+        '{"a.b":1.5,"x y":2.5,"ts":null,"q`t":"s"}',
+    ]
+    assert to_json_records(df, limit=1) == ['{"a.b":null,"x y":null,"ts":"2024-01-02T03:04:05.500000Z","q`t":"p"}']
+    assert to_csv_string(df) == (
+        "a.b,x y,ts,q`t\n"
+        ",,2024-01-02T03:04:05.500000Z,p\n"
+        ",,,\n"
+        ",,2024-01-02T03:04:05.500000Z,r\n"
+        "1.5,2.5,,s\n"
+    )
+    assert [tuple(r) for r in sanitize_floats(df).collect()] == [
+        (None, None, ts, "p"), (None, None, None, None), (None, None, ts, "r"), (1.5, 2.5, None, "s")
+    ]
+    assert [r["ts"] for r in timestamps_to_iso(df).collect()] == [
+        "2024-01-02T03:04:05.500000Z", None, "2024-01-02T03:04:05.500000Z", None
+    ]
 
 
 def test_streaming_ingest_and_tumbling_batch_parity(spark, events, tmp_path):
