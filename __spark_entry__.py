@@ -16,6 +16,7 @@ Determinism policy (so Spark and the DuckDB oracle hash-match):
 from __future__ import annotations
 
 import math
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -86,6 +87,11 @@ from real_time_financial_data_pipeline_spark.streaming.aggregates import (
 )
 
 SF0001 = "/root/testdata/sf0.001"
+# every staged-oracle table (the _STAGED_* paths below) lives under this
+# checkout's own spark-warehouse, so two checkouts never share staging
+_STAGED_ROOT = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "spark-warehouse", "staged"
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -191,8 +197,6 @@ def _derived_is_stale(dest_dir: str, src_file: str) -> bool:
     between rounds while spark-warehouse can persist, so existence alone
     isn't freshness — each derived dir carries a ``_SRC_MTIME`` stamp
     (underscore-prefixed: Spark's parquet reader ignores it)."""
-    import os
-
     try:
         src = str(os.path.getmtime(src_file))
         with open(os.path.join(dest_dir, "_SRC_MTIME")) as fh:
@@ -202,8 +206,6 @@ def _derived_is_stale(dest_dir: str, src_file: str) -> bool:
 
 
 def _stamp_derived(dest_dir: str, src_file: str) -> None:
-    import os
-
     with open(os.path.join(dest_dir, "_SRC_MTIME"), "w") as fh:
         fh.write(str(os.path.getmtime(src_file)))
 
@@ -220,8 +222,6 @@ def _pipeline_gold_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays the same chain in SQL (DISTINCT+not-null → daily
     avg/count → strftime), so the composition — not just each stage — is
     hash-checked."""
-    import os
-
     from real_time_financial_data_pipeline_spark.lake import DataLake
     from real_time_financial_data_pipeline_spark.pipeline import transform_pipeline
 
@@ -595,7 +595,7 @@ def _token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_stats(load_table(spark, sf_dir, "documents"))
 
 
-_STAGED_QC_DIR = "/root/repo/spark-warehouse/staged/quality_weights"
+_STAGED_QC_DIR = os.path.join(_STAGED_ROOT, "quality_weights")
 
 
 def _quality_classifier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -642,8 +642,8 @@ def _quality_classifier_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_MC_W_DIR = "/root/repo/spark-warehouse/staged/multiclass_weights"
-_STAGED_MC_BK_DIR = "/root/repo/spark-warehouse/staged/multiclass_buckets"
+_STAGED_MC_W_DIR = os.path.join(_STAGED_ROOT, "multiclass_weights")
+_STAGED_MC_BK_DIR = os.path.join(_STAGED_ROOT, "multiclass_buckets")
 _MC_N_BUCKETS = 512
 
 
@@ -741,8 +741,8 @@ def _ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # independently recomputes every cosine score from the raw embeddings and
 # re-derives the ranks — so the scoring kernel and ranking logic are
 # hash-checked, only candidate selection is taken from staging.
-_STAGED_ANN_LSH_DIR = "/root/repo/spark-warehouse/staged/ann_lsh_topk"
-_STAGED_ANN_IVF_DIR = "/root/repo/spark-warehouse/staged/ann_ivf_topk"
+_STAGED_ANN_LSH_DIR = os.path.join(_STAGED_ROOT, "ann_lsh_topk")
+_STAGED_ANN_IVF_DIR = os.path.join(_STAGED_ROOT, "ann_ivf_topk")
 
 
 def _stage_and_return(df: DataFrame, path: str) -> DataFrame:
@@ -783,9 +783,9 @@ def _ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # documents) + per-pack budget for the packing.  An invariant violation
 # aborts the oracle query → the row shows as err, not a silent pass.
 
-_STAGED_SPLIT_DIR = "/root/repo/spark-warehouse/staged/split_assignment"
-_STAGED_PACKS_DIR = "/root/repo/spark-warehouse/staged/pack_chunks"
-_STAGED_ANN_Q8_DIR = "/root/repo/spark-warehouse/staged/ann_int8"
+_STAGED_SPLIT_DIR = os.path.join(_STAGED_ROOT, "split_assignment")
+_STAGED_PACKS_DIR = os.path.join(_STAGED_ROOT, "pack_chunks")
+_STAGED_ANN_Q8_DIR = os.path.join(_STAGED_ROOT, "ann_int8")
 
 
 def _chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,7 +910,7 @@ def _ann_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk_q8(staged, emb.filter(F.col("vec_id") < 5), k=10)
 
 
-_STAGED_IVFPQ_DIR = "/root/repo/spark-warehouse/staged/ann_ivfpq"
+_STAGED_IVFPQ_DIR = os.path.join(_STAGED_ROOT, "ann_ivfpq")
 
 
 def _ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -934,7 +934,7 @@ def _ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_BPE_DIR = "/root/repo/spark-warehouse/staged/bpe_merges"
+_STAGED_BPE_DIR = os.path.join(_STAGED_ROOT, "bpe_merges")
 
 
 def _bpe_token_count_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,7 +1007,7 @@ def _dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # — an external harness can't intercept that.  Cost: the bench for
 # minhash_pairs includes its small coalesce(1) write (~0.2 s at sf0.1),
 # accepted as the price of a hash-checked result.
-_STAGED_PAIRS_DIR = "/root/repo/spark-warehouse/staged/minhash_pairs"
+_STAGED_PAIRS_DIR = os.path.join(_STAGED_ROOT, "minhash_pairs")
 
 
 def _stage_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1062,7 +1062,7 @@ def _dedup_apply_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apply_dedup(docs, pairs).select("doc_id", "lang", "source", "n_chars")
 
 
-_STAGED_SIMHASH_DIR = "/root/repo/spark-warehouse/staged/simhash_sigs"
+_STAGED_SIMHASH_DIR = os.path.join(_STAGED_ROOT, "simhash_sigs")
 
 
 def _simhash_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1081,7 +1081,7 @@ def _simhash_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_pairs(docs, max_hamming=3, sig_df=staged)
 
 
-_STAGED_FUZZY_DIR = "/root/repo/spark-warehouse/staged/fuzzy_candidates"
+_STAGED_FUZZY_DIR = os.path.join(_STAGED_ROOT, "fuzzy_candidates")
 
 
 def _fuzzy_linkage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1122,7 +1122,7 @@ def _fuzzy_linkage_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_KMV_DIR = "/root/repo/spark-warehouse/staged/kmv_hashes"
+_STAGED_KMV_DIR = os.path.join(_STAGED_ROOT, "kmv_hashes")
 
 
 def _kmv_sketch_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1177,8 +1177,8 @@ def _kmv_sketch_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_KMV_FOLD_DIR = "/root/repo/spark-warehouse/staged/stream_kmv_fold"
-_STAGED_KMV_FOLD_HASHES = "/root/repo/spark-warehouse/staged/stream_kmv_fold_hashes"
+_STAGED_KMV_FOLD_DIR = os.path.join(_STAGED_ROOT, "stream_kmv_fold")
+_STAGED_KMV_FOLD_HASHES = os.path.join(_STAGED_ROOT, "stream_kmv_fold_hashes")
 
 
 def _stream_kmv_fold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1413,7 +1413,7 @@ def _jsonl_ingest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STAGED_WARC_DIR = "/root/repo/spark-warehouse/staged/warc_ingest"
+_STAGED_WARC_DIR = os.path.join(_STAGED_ROOT, "warc_ingest")
 
 
 def _warc_ingest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1438,8 +1438,6 @@ def _warc_ingest_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1.5 MB of text at sf0.1 — and this is fixture CONSTRUCTION for the
     reader under test, not a query path; real ingestion reads members
     that already exist)."""
-    import os
-
     from real_time_financial_data_pipeline_spark.sources.warc import (
         read_warc_strict,
         warc_documents,
@@ -1520,7 +1518,7 @@ def _pagerank_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
-_STAGED_GRAPH_FOLD_DIR = "/root/repo/spark-warehouse/staged/stream_graph_fold"
+_STAGED_GRAPH_FOLD_DIR = os.path.join(_STAGED_ROOT, "stream_graph_fold")
 
 
 def _stream_graph_fold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1584,7 +1582,7 @@ def _stream_graph_fold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot.select("src_domain", "dst_domain", "weight")
 
 
-_STAGED_ANCHOR_FOLD_DIR = "/root/repo/spark-warehouse/staged/stream_anchor_fold"
+_STAGED_ANCHOR_FOLD_DIR = os.path.join(_STAGED_ROOT, "stream_anchor_fold")
 
 
 def _stream_anchor_fold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1847,9 +1845,9 @@ def _domain_mix_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return domain_mix(load_table(spark, sf_dir, "documents"))
 
 
-_STAGED_JSONL_DIR = "/root/repo/spark-warehouse/staged/jsonl_dump"
-_STAGED_TSET_DIR = "/root/repo/spark-warehouse/staged/training_set_split"
-_STAGED_CENTROIDS_DIR = "/root/repo/spark-warehouse/staged/cluster_centroids"
+_STAGED_JSONL_DIR = os.path.join(_STAGED_ROOT, "jsonl_dump")
+_STAGED_TSET_DIR = os.path.join(_STAGED_ROOT, "training_set_split")
+_STAGED_CENTROIDS_DIR = os.path.join(_STAGED_ROOT, "cluster_centroids")
 
 
 def _cluster_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1872,7 +1870,7 @@ def _cluster_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cluster_assign(emb, centroids=cents).select("vec_id", "cluster_id")
 
 
-_STAGED_SEMDEDUP_DIR = "/root/repo/spark-warehouse/staged/semdedup_centroids"
+_STAGED_SEMDEDUP_DIR = os.path.join(_STAGED_ROOT, "semdedup_centroids")
 
 
 def _semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2051,8 +2049,6 @@ def _partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     redesign of the reference's per-date parquet files
     (storage.py:17-27,144-170) — date filters prune at the FILE level
     instead of parsing filename date tokens."""
-    import os
-
     from real_time_financial_data_pipeline_spark.lake import DataLake
 
     sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
@@ -2102,8 +2098,6 @@ def _bucketed_order_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle left is the tiny per-segment aggregate (asserted by
     tools/plan_audit.py, max_exchange=1).  At 100 TB, pre-bucketing the
     fact tables on the join key once pays for every subsequent join."""
-    import os
-
     from real_time_financial_data_pipeline_spark.lake import DataLake
 
     sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
@@ -2201,7 +2195,6 @@ def _stream_tumbling_daily_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied at sf0.1, not a local[32] hack.  Conf is restored after the
     drain (checkpointed streams bake the partition count at first start,
     so the fresh-checkpoint-per-run contract makes the pin safe)."""
-    import os
     import shutil
 
     _STREAM_SEQ[0] += 1

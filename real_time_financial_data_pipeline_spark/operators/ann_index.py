@@ -5,29 +5,25 @@ call — right for one-shot analytics, wrong for a serving corpus queried
 repeatedly.  This module makes the index a lake artifact:
 
 - ``build_ivf_index`` trains the coarse quantizer (and optionally the PQ
-  codebooks) ONCE — both fits share one ``hash_sample`` collect — then
-  assigns every vector to its posting list and writes the corpus
+  codebooks) ONCE on one ``hash_sample`` collect, lays the corpus out
+  as ``_ivf_assign`` does for the in-memory searches, and writes it
   ``partitionBy("list_id")``: each posting list is a partition
-  DIRECTORY.  Centroids/codebooks/params are tiny sidecar files.
-- ``search_ivf_index`` reads the centroids driver-side, picks each
-  query's ``n_probe`` lists, and scans the corpus with a
-  ``list_id IN (...)`` filter — Spark prunes at the FILE level, so a
-  probe literally reads n_probe/n_lists of the index bytes off disk
-  (asserted via PartitionFilters in tests).  Scoring inside probed lists
-  is exact cosine (float path) or ADC over the stored PQ codes + exact
-  rerank (pq path).  The pq ADC stage projects ONLY (id, list_id,
-  codes), so parquet column pruning keeps the 64x-larger float column
-  unread until the k*rerank finalists fetch theirs.
+  DIRECTORY.  Centroids/codebooks/params are a small sidecar file.
+- ``search_ivf_index`` reads the index and hands it to
+  ``similarity._ivf_search``, the search core of ``ivf_topk`` and
+  ``ivf_pq_topk``, with partition pruning on.  The scan then carries a
+  ``list_id IN (probed lists)`` partition filter, so a probe reads
+  n_probe/n_lists of the index bytes off disk (asserted in tests).  The
+  PQ ADC stage projects only (id, list_id, codes), so parquet column
+  pruning leaves the float column unread until the k*rerank finalists
+  fetch theirs.
 
-This turns the IVF cost model from "scan everything, skip most rows"
-into "never read the skipped bytes" — at 100 TB the difference between
-a full-corpus scan per query batch and touching a few partitions.
-
-Determinism: same seeds/params as the in-memory path; building twice
-from the same corpus yields byte-identical assignments, and
-``search_ivf_index`` equals ``ivf_topk``/``ivf_pq_topk`` with the same
-parameters (asserted in tests — the probe/LUT/rounding machinery is the
-SAME shared helpers, not a copy).
+The shared contract: same seeds and parameters give the same quantizers
+as the in-memory path, and ``search_ivf_index`` returns exactly what
+``ivf_topk``/``ivf_pq_topk`` return — the same probe table, the same
+9-dp ADC snap before the finalist cut, the same 9-then-6 dp exact
+scores and (score desc, neighbor_id asc) ranking, because it is the same
+code (asserted in tests).
 """
 
 from __future__ import annotations
@@ -37,23 +33,10 @@ import os
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
+from pyspark.sql import DataFrame, SparkSession
 
 from ..streaming.ingest import start_foreach_batch
-from .similarity import (
-    _adc_score,
-    hash_sample,
-    nearest_list,
-    pq_codes,
-    pq_luts,
-    probe_lists_for,
-    rounded_pairwise_cosine,
-    topk_per_query,
-    train_centroids,
-    train_pq,
-)
+from .similarity import _fit_quantizers, _ivf_assign, _ivf_search
 
 
 def build_ivf_index(
@@ -77,26 +60,13 @@ def build_ivf_index(
     search time).  One sample collect feeds both quantizer fits; one
     pass over the corpus assigns and encodes (map-only Arrow
     projections); the only data movement is the partitioned write."""
-    X = hash_sample(corpus, id_col, vec_col, seed, sample_size)
-    centroids = train_centroids(
-        corpus, n_lists, id_col=id_col, vec_col=vec_col, seed=seed,
-        sample_size=sample_size, iters=iters, sample=X,
+    centroids, codebooks = _fit_quantizers(
+        corpus, n_lists, pq=pq, m=m, n_codes=n_codes, id_col=id_col,
+        vec_col=vec_col, seed=seed, sample_size=sample_size, iters=iters,
     )
-    cols = [
-        F.col(id_col),
-        F.col(vec_col),
-        nearest_list(F.col(vec_col), centroids).alias("list_id"),
-    ]
-    codebooks = None
-    if pq:
-        codebooks = train_pq(
-            corpus, m, n_codes, id_col=id_col, vec_col=vec_col, seed=seed,
-            sample_size=sample_size, iters=iters, sample=X,
-        )
-        cols.append(pq_codes(F.col(vec_col), codebooks).alias("codes"))
-    corpus.select(*cols).write.partitionBy("list_id").mode("overwrite").parquet(
-        os.path.join(path, "vectors")
-    )
+    _ivf_assign(corpus, id_col, vec_col, centroids, codebooks).write.partitionBy(
+        "list_id"
+    ).mode("overwrite").parquet(os.path.join(path, "vectors"))
     meta = {
         "id_col": id_col,
         "vec_col": vec_col,
@@ -112,10 +82,15 @@ def build_ivf_index(
     return meta
 
 
-def _empty_result(spark: SparkSession, vectors: DataFrame, id_col: str) -> DataFrame:
-    id_t = vectors.schema[id_col].dataType.simpleString()
-    return spark.createDataFrame(
-        [], f"query_id {id_t}, neighbor_id {id_t}, score double, rank bigint"
+def _load_meta(path: str) -> tuple[dict, np.ndarray, np.ndarray | None]:
+    """The index sidecar: (params, centroids, codebooks or None)."""
+    with open(os.path.join(path, "centroids.json")) as f:
+        meta = json.load(f)
+    codebooks = meta["codebooks"]
+    return (
+        meta,
+        np.asarray(meta["centroids"], dtype=np.float64),
+        None if codebooks is None else np.asarray(codebooks, dtype=np.float64),
     )
 
 
@@ -131,88 +106,14 @@ def search_ivf_index(
     query's ``n_probe`` nearest lists come from one tiny numpy matmul,
     and the index scan carries ``list_id IN (union of probes)`` so only
     those partition directories are read.  Returns the ``cosine_topk``
-    schema (exact cosine scores — the pq path reranks its ADC finalists
-    exactly like ``ivf_pq_topk``)."""
-    with open(os.path.join(path, "centroids.json")) as f:
-        meta = json.load(f)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    centroids = np.asarray(meta["centroids"], dtype=np.float64)
-
-    q_rows = queries.select(id_col, vec_col).collect()
+    schema — exactly ``ivf_topk`` / ``ivf_pq_topk`` (``rerank`` applies
+    to a PQ index only)."""
+    meta, centroids, codebooks = _load_meta(path)
     vectors = spark.read.parquet(os.path.join(path, "vectors"))
-    if not q_rows:
-        return _empty_result(spark, vectors, id_col)
-    Q = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    probe_idx = probe_lists_for(Qn, centroids, n_probe)
-    probed_lists = sorted({int(x) for row in probe_idx for x in row})
-    # partition pruning: only the probed list_id directories are scanned
-    pruned = vectors.filter(F.col("list_id").isin(probed_lists))
-    id_t = vectors.schema[id_col].dataType.simpleString()
-    vec_t = vectors.schema[vec_col].dataType.simpleString()
-
-    if not meta["pq"]:
-        probes = [
-            (r[0], list(r[1]), int(lst))
-            for r, lists in zip(q_rows, probe_idx)
-            for lst in lists
-        ]
-        q = spark.createDataFrame(
-            probes, f"query_id {id_t}, query_vec {vec_t}, list_id long"
-        )
-        joined = pruned.withColumnRenamed(id_col, "neighbor_id").join(
-            broadcast(q), "list_id"
-        ).filter(F.col("neighbor_id") != F.col("query_id"))
-        scored = joined.select(
-            "query_id",
-            "neighbor_id",
-            rounded_pairwise_cosine(F.col(vec_col), F.col("query_vec")).alias("score"),
-        )
-        return topk_per_query(scored, k)
-
-    # pq path: ADC over a CODES-ONLY projection of the probed lists
-    # (column pruning keeps the float column unread here), then exact
-    # rerank fetching floats for just the k*rerank finalists
-    codebooks = np.asarray(meta["codebooks"], dtype=np.float64)
-    m_eff, n_codes_eff, _ = codebooks.shape
-    luts = pq_luts(Qn, codebooks)
-    probes = [
-        (r[0], list(r[1]), [float(v) for v in lut], int(lst))
-        for r, lut, lists in zip(q_rows, luts, probe_idx)
-        for lst in lists
-    ]
-    q = spark.createDataFrame(
-        probes,
-        f"query_id {id_t}, query_vec {vec_t}, lut array<double>, list_id long",
+    return _ivf_search(
+        vectors, queries, k, n_probe, meta["id_col"], meta["vec_col"], centroids,
+        codebooks, rerank, prune=True,
     )
-    codes_only = pruned.select(
-        F.col(id_col).alias("neighbor_id"), F.col("list_id"), F.col("codes")
-    )
-    cand = codes_only.join(broadcast(q), "list_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    adc = cand.select(
-        "query_id",
-        "query_vec",
-        "neighbor_id",
-        _adc_score(F.col("codes"), F.col("lut"), m_eff, n_codes_eff).alias("adc"),
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    finalists = adc.withColumn("_r", F.row_number().over(w_adc)).filter(
-        F.col("_r") <= k * rerank
-    )
-    vecs = pruned.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec")
-    )
-    reranked = vecs.join(
-        broadcast(finalists.select("query_id", "query_vec", "neighbor_id")),
-        "neighbor_id",
-    ).select(
-        "query_id",
-        "neighbor_id",
-        rounded_pairwise_cosine(F.col("_nvec"), F.col("query_vec")).alias("score"),
-    )
-    return topk_per_query(reranked, k)
 
 
 def append_to_ivf_index(new_vectors: DataFrame, path: str) -> None:
@@ -221,21 +122,10 @@ def append_to_ivf_index(new_vectors: DataFrame, path: str) -> None:
     into the existing partition directories.  The standard IVF posture:
     centroids drift only when a rebuild is scheduled, appends are cheap
     map-only writes."""
-    with open(os.path.join(path, "centroids.json")) as f:
-        meta = json.load(f)
-    id_col, vec_col = meta["id_col"], meta["vec_col"]
-    centroids = np.asarray(meta["centroids"], dtype=np.float64)
-    cols = [
-        F.col(id_col),
-        F.col(vec_col),
-        nearest_list(F.col(vec_col), centroids).alias("list_id"),
-    ]
-    if meta["pq"]:
-        codebooks = np.asarray(meta["codebooks"], dtype=np.float64)
-        cols.append(pq_codes(F.col(vec_col), codebooks).alias("codes"))
-    new_vectors.select(*cols).write.partitionBy("list_id").mode("append").parquet(
-        os.path.join(path, "vectors")
-    )
+    meta, centroids, codebooks = _load_meta(path)
+    _ivf_assign(
+        new_vectors, meta["id_col"], meta["vec_col"], centroids, codebooks
+    ).write.partitionBy("list_id").mode("append").parquet(os.path.join(path, "vectors"))
 
 
 def stream_search(

@@ -836,8 +836,7 @@ def resolve_dup_clusters(
     driver-side union-find resolves components in microseconds.  Above
     the threshold the distributed **large-star/small-star** two-phase
     algorithm takes over (:func:`_resolve_two_phase_star`) — O(log n)
-    rounds on ANY graph shape, where the per-round-min-label loop this
-    replaced (kept as :func:`_resolve_min_label` for parity testing)
+    rounds on ANY graph shape, where per-round min-label propagation
     needs O(component diameter) rounds and an adversarial near-dup CHAIN
     (A~B~C~…, common in shingled boilerplate corpora) makes the diameter
     O(n).  Same output either way; ``stats['rounds']`` reports the
@@ -1007,70 +1006,6 @@ def _resolve_two_phase_star(
     ).select(
         id_col, F.coalesce(F.col("_canon"), F.col(id_col)).alias("canonical_id")
     )
-
-
-def _resolve_min_label(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    id_col: str = "doc_id",
-    max_rounds: int = 20,
-) -> DataFrame:
-    """Per-round min-label propagation — the O(component diameter)-rounds
-    resolver :func:`_resolve_two_phase_star` superseded, retained for
-    parity tests and the skew-bench comparison (it is the natural
-    baseline: fine on blob-shaped near-dup clusters, pathological on
-    chains).  Raises if labels are still moving after ``max_rounds``."""
-    n_parts = max(4, pairs.sparkSession.sparkContext.defaultParallelism // 4)
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .repartition(n_parts, "src")
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    changed = -1
-    for _ in range(max_rounds):  # bound: cluster diameter
-        neighbor_min = (
-            edges.join(labels.withColumnsRenamed({"id": "dst", "label": "n_label"}), "dst")
-            .groupBy("src")
-            .agg(F.min("n_label").alias("n_min"))
-        )
-        updated = (
-            labels.join(neighbor_min.withColumnRenamed("src", "id"), "id", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("n_min"), F.col("label"))).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            updated.alias("u")
-            .join(labels.alias("l"), "id")
-            .filter(F.col("u.label") != F.col("l.label"))
-            .count()
-        )
-        # the changed-count was the old checkpoint's last reader —
-        # release its blocks as in the two-phase resolver above
-        old = labels
-        labels = updated
-        from real_time_financial_data_pipeline_spark.operators.crawl_graph import (
-            _release_checkpoint,
-        )
-
-        _release_checkpoint(old, reliable=False)
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"dup-cluster propagation did not converge in {max_rounds} rounds "
-            f"({changed} labels still changing); raise max_rounds"
-        )
-    return labels.select(F.col("id").alias(id_col), F.col("label").alias("canonical_id"))
 
 
 def apply_dedup(df: DataFrame, pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:

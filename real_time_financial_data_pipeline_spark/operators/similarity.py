@@ -1,26 +1,38 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, same semantics:
+Every top-k search here is one pipeline: candidate generation, then
+scoring, then :func:`topk_per_query`.  The entry points differ only in
+how they generate candidates:
 
-- ``cosine_topk`` — exact brute force.  The query set is collected to a
-  numpy matrix and broadcast; each Arrow batch of the corpus is scored
-  with ONE ``float64`` matmul (``mapInPandas``), then top-k is a per-query
-  window.  Cost O(|corpus|·|queries|) but embarrassingly parallel and
-  shuffle-free until the final tiny top-k.  Per-row scores depend only on
-  that row and the broadcast matrix, so results are deterministic under
-  any partitioning.
-- ``lsh_topk`` — the 100 TB path: random-hyperplane signatures bucket the
-  corpus (signature = sign pattern of h fixed random projections), queries
-  probe only their own bucket (plus optional multi-probe neighbors), then
-  exact cosine re-ranks inside buckets.  Recall trades off with bucket
-  count; the random planes are seeded and reproducible.
+- all corpus rows: ``cosine_topk`` / ``cosine_topk_q8`` (the query matrix
+  is broadcast and each Arrow batch is scored with one float64 matmul);
+- a shared random-hyperplane bucket: ``lsh_topk``;
+- the ``n_probe`` nearest IVF posting lists: ``ivf_topk``,
+  ``ivf_pq_topk`` and ``ann_index.search_ivf_index``, all through
+  :func:`_ivf_search`.  The PQ variant first ranks candidates by ADC over
+  the stored codes, then rescores its ``k * rerank`` finalists exactly.
 
-Scoring kernels are Arrow-batched numpy (``pandas_udf`` / ``mapInPandas``)
-— Spark higher-order functions (``aggregate``/``zip_with``) never enter
-whole-stage codegen and walk an interpreter per array element, which made
-the previous HOF dot product the dominant CPU sink at any corpus size.
-The interpreted fold versions are kept below (``dot``/``norm``/``cosine``)
-as a reference implementation for tiny inputs and cross-checking.
+The contract every path shares:
+
+- the query side is small and collected to the driver
+  (:func:`_collect_queries`); no queries gives the one empty
+  (query_id, neighbor_id, score, rank) frame;
+- a query never matches itself (same id);
+- scores are cosines in float64, snapped to 9 dp (the cross-engine guard
+  band: numpy and a SQL engine's fold-order dot differ by ~1 ulp) and
+  then rounded to 6 dp; ADC scores are snapped to 9 dp before the
+  finalist cut for the same reason;
+- ranks follow the total order (score desc, neighbor_id asc), so results
+  are deterministic under any partitioning;
+- zero-norm vectors have no cosine.  They are left out of every quantizer
+  training sample (a normalised zero is NaN, and one NaN centroid would
+  swallow every list), and a zero-norm corpus row scores null and ranks
+  after every scored neighbour.
+
+Scoring kernels are Arrow-batched numpy (``pandas_udf`` / ``mapInPandas``):
+Spark higher-order functions never enter whole-stage codegen.  The
+interpreted folds (``dot``/``norm``/``cosine``) are a reference for tiny
+inputs and cross-checks only.
 """
 
 from __future__ import annotations
@@ -28,7 +40,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.types import ArrayType, DoubleType, LongType
@@ -98,6 +110,44 @@ def pairwise_cosine(a: Column, b: Column, single_eval: bool = False) -> Column:
     return fn(a, b)
 
 
+def rounded_pairwise_cosine(a: Column, b: Column) -> Column:
+    """The repo-wide ANN score convention: 9-dp snap (cross-engine guard
+    band) then the 6-dp serving round — ONE definition shared by every
+    search path so the rounding contract can't drift between them."""
+    return F.round(F.round(pairwise_cosine(a, b), 9), 6)
+
+
+def _collect_queries(
+    queries: DataFrame, id_col: str, vec_col: str
+) -> tuple[list, np.ndarray, np.ndarray]:
+    """The query side of every search, collected to the driver (small by
+    contract, like a broadcast-join build side): ids, the float64 matrix
+    and its row norms."""
+    rows = queries.select(id_col, vec_col).collect()
+    Q = np.asarray([list(r[1]) for r in rows], dtype=np.float64)
+    return [r[0] for r in rows], Q, np.linalg.norm(Q, axis=-1)
+
+
+def _empty_topk(spark: SparkSession, id_type: str) -> DataFrame:
+    """The search result for an empty query set."""
+    return spark.createDataFrame(
+        [], f"query_id {id_type}, neighbor_id {id_type}, score double, rank bigint"
+    )
+
+
+def topk_per_query(scored: DataFrame, k: int, score_col: str = "score") -> DataFrame:
+    """(query_id, neighbor_id, score) -> ranked top-k per query with the
+    deterministic (score desc, neighbor_id asc) total order."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score_col), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.col(score_col).alias("score"), "rank")
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -140,16 +190,10 @@ def _brute_topk(
     id_type = corpus.schema[id_col].dataType.simpleString()
     out_ddl = f"neighbor_id {id_type}, query_id {id_type}, _score_raw double"
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        empty = spark.createDataFrame(
-            [], f"query_id {id_type}, neighbor_id {id_type}, score double, rank bigint"
-        )
-        return empty
-    q_ids = np.asarray([r[0] for r in q_rows])
-    Q = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_norm = np.linalg.norm(Q, axis=1)
-    bq = spark.sparkContext.broadcast((q_ids, Q, q_norm))
+    q_ids, Q, q_norm = _collect_queries(queries, id_col, vec_col)
+    if not q_ids:
+        return _empty_topk(spark, id_type)
+    bq = spark.sparkContext.broadcast((np.asarray(q_ids), Q, q_norm))
 
     def _score(batches):
         ids, Qm, qn = bq.value
@@ -171,21 +215,11 @@ def _brute_topk(
     scored = corpus.select(id_col, *select_cols).mapInPandas(_score, schema=out_ddl)
     if exclude_self:
         scored = scored.filter(F.col("neighbor_id") != F.col("query_id"))
-    # guard band: numpy matmul and a fold-order engine (e.g. a SQL oracle's
-    # list_dot_product) can differ by ~1 ulp; snapping to 9 dp first makes
-    # the 6-dp serving round agree across engines unless the true value sits
-    # within 1e-9 of a boundary (vs 1e-16 without it)
+    # the 9-then-6 dp guard band of rounded_pairwise_cosine
     scored = scored.select(
         "query_id", "neighbor_id", F.round(F.round("_score_raw", 9), 6).alias("score")
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return topk_per_query(scored, k)
 
 
 def cosine_topk_q8(
@@ -407,20 +441,12 @@ def lsh_topk(
         # a pair can collide in several tables/probes — score it once
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    # same 9-then-6 dp guard band as cosine_topk (scores comparable 1:1)
     scored = joined.select(
         "query_id",
         "neighbor_id",
-        F.round(F.round(pairwise_cosine(F.col("vec"), F.col("query_vec")), 9), 6).alias("score"),
+        rounded_pairwise_cosine(F.col("vec"), F.col("query_vec")).alias("score"),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return topk_per_query(scored, k)
 
 
 def recall_at_k(exact: DataFrame, approx: DataFrame) -> float:
@@ -527,11 +553,18 @@ def hash_sample(
     the corpus that doesn't depend on partitioning (unlike
     ``sample(seed)``) and runs as TakeOrderedAndProject (top-k per
     partition, no full sort).  Collected ONCE and shared by every
-    quantizer fit (coarse centroids + PQ codebooks)."""
+    quantizer fit (coarse centroids + PQ codebooks).
+
+    Zero-norm vectors are left out before the sample is drawn: both fits
+    normalise the sample, and one zero row made a NaN centroid that
+    ``nearest_list`` then gave every vector while ``probe_lists_for``
+    ranked it last, so IVF found nothing.  A corpus with zero rows added
+    therefore trains exactly the quantizers it trains without them."""
     sample = (
         corpus.select(
             vec_col, F.col(id_col), F.xxhash64(F.col(id_col), F.lit(seed)).alias("_hid")
         )
+        .filter(F.exists(vec_col, lambda x: x != 0))
         .orderBy("_hid", id_col)
         .limit(sample_size)
         .select(vec_col)
@@ -640,45 +673,153 @@ def ivf_topk(
     Returns the ``cosine_topk`` schema; fully deterministic (seeded init,
     fixed iterations, lowest-index tie-breaks).
     """
-    centroids = train_centroids(
+    centroids, _ = _fit_quantizers(
         corpus, n_lists, id_col=id_col, vec_col=vec_col, seed=seed,
         sample_size=sample_size, iters=iters,
     )
+    return _ivf_search(
+        _ivf_assign(corpus, id_col, vec_col, centroids), queries, k, n_probe,
+        id_col, vec_col, centroids,
+    )
 
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("vec"),
+
+def _fit_quantizers(
+    corpus: DataFrame,
+    n_lists: int,
+    pq: bool = False,
+    m: int = 8,
+    n_codes: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+    sample_size: int = 2048,
+    iters: int = 8,
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """The coarse quantizer, plus the PQ codebooks when ``pq``, fitted on
+    ONE ``hash_sample`` collect: (centroids, codebooks or None)."""
+    X = hash_sample(corpus, id_col, vec_col, seed, sample_size)
+    centroids = train_centroids(corpus, n_lists, seed=seed, iters=iters, sample=X)
+    codebooks = train_pq(corpus, m, n_codes, seed=seed, iters=iters, sample=X) if pq else None
+    return centroids, codebooks
+
+
+def _ivf_assign(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: np.ndarray,
+    codebooks: np.ndarray | None = None,
+) -> DataFrame:
+    """The IVF layout of a corpus: (id, vector, list_id[, codes]), one
+    map-only pass of Arrow projections.  The in-memory searches scan it
+    directly; ``ann_index`` writes it partitioned by ``list_id``."""
+    cols = [
+        F.col(id_col),
+        F.col(vec_col),
         nearest_list(F.col(vec_col), centroids).alias("list_id"),
-    )
-    # queries are small (broadcast contract): probe lists computed driver-side
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], f"query_id {corpus.schema[id_col].dataType.simpleString()}, "
-                f"neighbor_id {corpus.schema[id_col].dataType.simpleString()}, "
-                "score double, rank bigint"
-        )
-    Q = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    probe_idx = probe_lists_for(Qn, centroids, n_probe)
-    probes = [
-        (r[0], list(r[1]), int(lst))
-        for r, lists in zip(q_rows, probe_idx)
-        for lst in lists
     ]
-    q = corpus.sparkSession.createDataFrame(
-        probes,
-        f"query_id {corpus.schema[id_col].dataType.simpleString()}, "
-        f"query_vec {corpus.schema[vec_col].dataType.simpleString()}, "
-        "list_id long",
+    if codebooks is not None:
+        cols.append(pq_codes(F.col(vec_col), codebooks).alias("codes"))
+    return corpus.select(*cols)
+
+
+def _staged(df: DataFrame, stage_dir: str | None, name: str) -> DataFrame:
+    """Oracle plumbing: persist ``df`` to ``stage_dir/name`` and read it
+    back, so an external engine sees exactly the bits the search used."""
+    if stage_dir is None:
+        return df
+    df.coalesce(1).write.mode("overwrite").parquet(f"{stage_dir}/{name}")
+    return df.sparkSession.read.parquet(f"{stage_dir}/{name}")
+
+
+def _ivf_search(
+    assigned: DataFrame,
+    queries: DataFrame,
+    k: int,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    centroids: np.ndarray,
+    codebooks: np.ndarray | None = None,
+    rerank: int = 8,
+    prune: bool = False,
+    stage_dir: str | None = None,
+) -> DataFrame:
+    """The one IVF search behind ``ivf_topk``, ``ivf_pq_topk`` and
+    ``ann_index.search_ivf_index``, over an ``_ivf_assign`` layout.
+
+    1. Probe: each query's ``n_probe`` nearest lists (plus its ADC
+       look-up table when ``codebooks`` is given) form a small broadcast
+       probe table.  ``prune`` filters ``assigned`` to the probed lists
+       first; over a ``list_id``-partitioned index that is a file-level
+       partition filter.
+    2. Score: the exact path scores every probed candidate with
+       ``rounded_pairwise_cosine``.  The PQ path ranks candidates by ADC
+       over a codes-only projection (parquet column pruning leaves the
+       float column unread), snapped to 9 dp, keeps the top
+       ``k * rerank`` per query, and scores those finalists exactly.
+    3. Rank: ``topk_per_query``.
+
+    ``stage_dir`` persists the encoded corpus (``enc``) and the probe
+    table (``probes``) of the PQ path and reads them back (see
+    ``ivf_pq_topk``)."""
+    spark = assigned.sparkSession
+    id_t = assigned.schema[id_col].dataType.simpleString()
+    vec_t = assigned.schema[vec_col].dataType.simpleString()
+    q_ids, Q, q_norm = _collect_queries(queries, id_col, vec_col)
+    if not q_ids:
+        return _empty_topk(spark, id_t)
+    Qn = Q / q_norm[:, None]
+    probe_idx = probe_lists_for(Qn, centroids, n_probe)
+    if prune:
+        probed = sorted({int(x) for x in probe_idx.ravel()})
+        assigned = assigned.filter(F.col("list_id").isin(probed))
+    pq = codebooks is not None
+    luts = pq_luts(Qn, codebooks).tolist() if pq else None
+    probes = [
+        (qid, Q[i].tolist(), *([luts[i]] if pq else []), int(lst))
+        for i, qid in enumerate(q_ids)
+        for lst in probe_idx[i]
+    ]
+    lut_ddl = "lut array<double>, " if pq else ""
+    q = spark.createDataFrame(
+        probes, f"query_id {id_t}, query_vec {vec_t}, {lut_ddl}list_id long"
     )
-    joined = c.join(broadcast(q), "list_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = joined.select(
+    neighbor = F.col(id_col).alias("neighbor_id")
+    not_self = F.col("neighbor_id") != F.col("query_id")
+    if not pq:
+        pairs = (
+            assigned.select(neighbor, "list_id", F.col(vec_col).alias("_nvec"))
+            .join(broadcast(q), "list_id")
+            .filter(not_self)
+        )
+    else:
+        m, n_codes, _ = codebooks.shape
+        enc = _staged(assigned.select(neighbor, "list_id", "codes"), stage_dir, "enc")
+        adc = (
+            enc.join(broadcast(_staged(q, stage_dir, "probes")), "list_id")
+            .filter(not_self)
+            .select(
+                "query_id",
+                "query_vec",
+                "neighbor_id",
+                F.round(_adc_score(F.col("codes"), F.col("lut"), m, n_codes), 9).alias("adc"),
+            )
+        )
+        w_adc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
+        finalists = adc.withColumn("_r", F.row_number().over(w_adc)).filter(
+            F.col("_r") <= k * rerank
+        )
+        # finalists are |queries| * k * rerank rows: broadcast them onto
+        # the float table so only their vectors are ever fetched
+        pairs = assigned.select(neighbor, F.col(vec_col).alias("_nvec")).join(
+            broadcast(finalists.select("query_id", "query_vec", "neighbor_id")),
+            "neighbor_id",
+        )
+    scored = pairs.select(
         "query_id",
         "neighbor_id",
-        rounded_pairwise_cosine(F.col("vec"), F.col("query_vec")).alias("score"),
+        rounded_pairwise_cosine(F.col("_nvec"), F.col("query_vec")).alias("score"),
     )
     return topk_per_query(scored, k)
 
@@ -781,13 +922,6 @@ def _adc_score(codes: Column, lut_flat: Column, m: int, n_codes: int) -> Column:
     return _score(codes, lut_flat)
 
 
-def rounded_pairwise_cosine(a: Column, b: Column) -> Column:
-    """The repo-wide ANN score convention: 9-dp snap (cross-engine guard
-    band) then the 6-dp serving round — ONE definition shared by every
-    search path so the rounding contract can't drift between them."""
-    return F.round(F.round(pairwise_cosine(a, b), 9), 6)
-
-
 def probe_lists_for(Qn: np.ndarray, centroids: np.ndarray, n_probe: int) -> np.ndarray:
     """Each query's n_probe nearest coarse lists (stable argsort — ties
     resolve to the lowest list index on every engine)."""
@@ -801,21 +935,6 @@ def pq_luts(Qn: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
     return np.einsum(
         "qjd,jcd->qjc", Qn.reshape(len(Qn), m, dsub), codebooks
     ).reshape(len(Qn), m * n_codes)
-
-
-def topk_per_query(scored: DataFrame, k: int, score_col: str = "score") -> DataFrame:
-    """(query_id, neighbor_id, score) -> ranked top-k per query with the
-    deterministic (score desc, neighbor_id asc) total order."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(score_col), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col(score_col).alias("score"), "rank")
-    )
 
 
 def ivf_pq_topk(
@@ -860,87 +979,19 @@ def ivf_pq_topk(
     finalist cut engine-independent.
 
     ``stage_dir`` (oracle plumbing): when set, the encoded corpus
-    (neighbor_id, list_id, codes) and the probe table (query_id, lut,
-    list_id) persist to ``stage_dir``/enc and /probes and are read back,
-    so an external engine can recompute the ADC scan, finalist cut, and
-    exact rerank from exactly the bits this query used.
+    (neighbor_id, list_id, codes) and the probe table (query_id,
+    query_vec, lut, list_id) persist to ``stage_dir``/enc and /probes and
+    are read back, so an external engine can recompute the ADC scan,
+    finalist cut, and exact rerank from exactly the bits this query used.
     """
-    from pyspark.sql import Window
-
-    X = hash_sample(corpus, id_col, vec_col, seed, sample_size)  # ONE collect
-    centroids = train_centroids(
-        corpus, n_lists, id_col=id_col, vec_col=vec_col, seed=seed,
-        sample_size=sample_size, iters=iters, sample=X,
+    centroids, codebooks = _fit_quantizers(
+        corpus, n_lists, pq=True, m=m, n_codes=n_codes, id_col=id_col,
+        vec_col=vec_col, seed=seed, sample_size=sample_size, iters=iters,
     )
-    codebooks = train_pq(
-        corpus, m, n_codes, id_col=id_col, vec_col=vec_col, seed=seed,
-        sample_size=sample_size, iters=iters, sample=X,
+    return _ivf_search(
+        _ivf_assign(corpus, id_col, vec_col, centroids, codebooks), queries, k,
+        n_probe, id_col, vec_col, centroids, codebooks, rerank, stage_dir=stage_dir,
     )
-    n_codes_eff = codebooks.shape[1]
-
-    enc = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        nearest_list(F.col(vec_col), centroids).alias("list_id"),
-        pq_codes(F.col(vec_col), codebooks).alias("codes"),
-    )
-    if stage_dir is not None:
-        enc.coalesce(1).write.mode("overwrite").parquet(f"{stage_dir}/enc")
-        enc = corpus.sparkSession.read.parquet(f"{stage_dir}/enc")
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], f"query_id {corpus.schema[id_col].dataType.simpleString()}, "
-                f"neighbor_id {corpus.schema[id_col].dataType.simpleString()}, "
-                "score double, rank bigint"
-        )
-    Q = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    probe_idx = probe_lists_for(Qn, centroids, n_probe)
-    luts = pq_luts(Qn, codebooks)
-    probes = [
-        (r[0], list(r[1]), [float(v) for v in lut], int(lst))
-        for r, lut, lists in zip(q_rows, luts, probe_idx)
-        for lst in lists
-    ]
-    q = corpus.sparkSession.createDataFrame(
-        probes,
-        f"query_id {corpus.schema[id_col].dataType.simpleString()}, "
-        f"query_vec {corpus.schema[vec_col].dataType.simpleString()}, "
-        "lut array<double>, list_id long",
-    )
-    if stage_dir is not None:
-        q.coalesce(1).write.mode("overwrite").parquet(f"{stage_dir}/probes")
-        q = corpus.sparkSession.read.parquet(f"{stage_dir}/probes")
-    cand = enc.join(broadcast(q), "list_id").filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    adc = cand.select(
-        "query_id",
-        "query_vec",
-        "neighbor_id",
-        F.round(
-            _adc_score(F.col("codes"), F.col("lut"), m, n_codes_eff), 9
-        ).alias("adc"),
-    )
-    w_adc = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
-    finalists = adc.withColumn("_r", F.row_number().over(w_adc)).filter(
-        F.col("_r") <= k * rerank
-    )
-    vecs = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_nvec")
-    )
-    # finalists are |queries| * k * rerank rows: broadcast them onto the
-    # float table so only their vectors are ever fetched
-    reranked = vecs.join(
-        broadcast(finalists.select("query_id", "query_vec", "neighbor_id")),
-        "neighbor_id",
-    ).select(
-        "query_id",
-        "neighbor_id",
-        rounded_pairwise_cosine(F.col("_nvec"), F.col("query_vec")).alias("score"),
-    )
-    return topk_per_query(reranked, k)
 
 
 def semdedup_pairs(
@@ -999,47 +1050,64 @@ def semdedup_pairs(
     shape; a pair sharing several clusters reports its smallest shared
     cluster_id (deterministic).
     """
+    if centroids is None:
+        centroids = train_centroids(
+            corpus, k, id_col=id_col, vec_col=vec_col, seed=seed,
+            sample_size=sample_size, iters=iters,
+        )
+    return _cluster_pairs(
+        corpus, None, centroids, n_probe, threshold, id_col, vec_col, ("id_a", "id_b")
+    )
+
+
+def _cluster_pairs(
+    probing: DataFrame,
+    other: DataFrame | None,
+    centroids: np.ndarray,
+    n_probe: int,
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    names: tuple[str, str],
+) -> DataFrame:
+    """The within-cluster scorer of both SemDedup forms: (``names[0]``,
+    ``names[1]``, cluster_id, cos) for every pair that shares a cluster
+    and whose 9-dp cosine is >= ``threshold``.
+
+    ``probing`` joins its ``n_probe`` nearest clusters.  ``other`` joins
+    its single nearest one; ``other=None`` pairs ``probing`` with itself
+    (``names[0]`` < ``names[1]``).  A pair that shares several clusters
+    is emitted once, with its smallest shared cluster id.  The cosine is
+    ``single_eval`` because the threshold filter consumes it."""
     if n_probe < 1:
         raise ValueError(f"n_probe must be >= 1, got {n_probe}")
-    if n_probe == 1:
-        assigned = cluster_assign(
-            corpus, k, id_col, vec_col, seed, sample_size, iters, centroids,
-            out_col="_sem_cluster",
-        )
-    else:
-        if centroids is None:
-            centroids = train_centroids(
-                corpus, k, id_col=id_col, vec_col=vec_col, seed=seed,
-                sample_size=sample_size, iters=iters,
-            )
-        assigned = corpus.withColumn(
-            "_sem_cluster",
-            F.explode(nearest_lists(F.col(vec_col), centroids, n_probe)),
-        )
-    a = assigned.select(
-        "_sem_cluster", F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")
+    left, right = names
+    cluster = (
+        nearest_list(F.col(vec_col), centroids)
+        if n_probe == 1
+        else F.explode(nearest_lists(F.col(vec_col), centroids, n_probe))
     )
-    b = assigned.select(
-        "_sem_cluster", F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb")
+    assigned = probing.withColumn("_sem_cluster", cluster)
+    assigned_b = (
+        assigned
+        if other is None
+        else other.withColumn("_sem_cluster", nearest_list(F.col(vec_col), centroids))
     )
-    scored = (
-        a.join(b, "_sem_cluster")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("_cos9", F.round(pairwise_cosine(F.col("_va"), F.col("_vb"), single_eval=True), 9))
-        .filter(F.col("_cos9") >= threshold)
-    )
+    a = assigned.select("_sem_cluster", F.col(id_col).alias(left), F.col(vec_col).alias("_va"))
+    b = assigned_b.select("_sem_cluster", F.col(id_col).alias(right), F.col(vec_col).alias("_vb"))
+    joined = a.join(b, "_sem_cluster")
+    if other is None:
+        joined = joined.filter(F.col(left) < F.col(right))
+    scored = joined.withColumn(
+        "_cos9", F.round(pairwise_cosine(F.col("_va"), F.col("_vb"), single_eval=True), 9)
+    ).filter(F.col("_cos9") >= threshold)
     if n_probe > 1:
-        # a pair sharing several of its probe clusters must emit ONCE:
-        # keep the smallest shared cluster id (cos is identical per pair)
-        scored = scored.groupBy("id_a", "id_b").agg(
+        scored = scored.groupBy(left, right).agg(
             F.min("_sem_cluster").alias("_sem_cluster"),
             F.max("_cos9").alias("_cos9"),
         )
     return scored.select(
-        "id_a",
-        "id_b",
-        F.col("_sem_cluster").alias("cluster_id"),
-        F.round("_cos9", 6).alias("cos"),
+        left, right, F.col("_sem_cluster").alias("cluster_id"), F.round("_cos9", 6).alias("cos")
     )
 
 
@@ -1144,43 +1212,11 @@ def semdedup_pairs_between(
     recall lifts at ~n_probe× the probe cost while the corpus table's
     partitioning stays byte-identical, so a persisted pre-assigned
     corpus needs no rebuild when the knob changes."""
-    if n_probe < 1:
-        raise ValueError(f"n_probe must be >= 1, got {n_probe}")
     if centroids is None:
         centroids = train_centroids(corpus, k, id_col=id_col, vec_col=vec_col, seed=seed)
-    if n_probe == 1:
-        a = cluster_assign(
-            new_vecs, k, id_col, vec_col, centroids=centroids, out_col="_sem_cluster"
-        )
-    else:
-        a = new_vecs.withColumn(
-            "_sem_cluster",
-            F.explode(nearest_lists(F.col(vec_col), centroids, n_probe)),
-        )
-    a = a.select(
-        "_sem_cluster", F.col(id_col).alias("id_new"), F.col(vec_col).alias("_va")
-    )
-    b = cluster_assign(
-        corpus, k, id_col, vec_col, centroids=centroids, out_col="_sem_cluster"
-    ).select("_sem_cluster", F.col(id_col).alias("id_corpus"), F.col(vec_col).alias("_vb"))
-    scored = (
-        a.join(b, "_sem_cluster")
-        .withColumn("_cos9", F.round(pairwise_cosine(F.col("_va"), F.col("_vb"), single_eval=True), 9))
-        .filter(F.col("_cos9") >= threshold)
-    )
-    if n_probe > 1:
-        # with one corpus-side assignment a (new, corpus) pair can only
-        # match in the corpus vector's single cluster — but dedup anyway
-        # so the contract survives any future corpus-side multi-assign
-        scored = scored.groupBy("id_new", "id_corpus").agg(
-            F.min("_sem_cluster").alias("_sem_cluster"),
-            F.max("_cos9").alias("_cos9"),
-        )
-    return scored.select(
-        "id_new",
-        "id_corpus",
-        F.col("_sem_cluster").alias("cluster_id"),
-        F.round("_cos9", 6).alias("cos"),
+    return _cluster_pairs(
+        new_vecs, corpus, centroids, n_probe, threshold, id_col, vec_col,
+        ("id_new", "id_corpus"),
     )
 
 

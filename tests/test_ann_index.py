@@ -27,13 +27,20 @@ def test_search_equals_in_memory_ivf(spark, embeddings, tmp_path):
 
 
 def test_pq_search_equals_in_memory_ivf_pq(spark, embeddings, tmp_path):
+    """Same rows as ``ivf_pq_topk``, including the 9-dp ADC snap before
+    the k*rerank finalist cut, for each (query set, n_probe, rerank)."""
     path = str(tmp_path / "idx_pq")
     meta = build_ivf_index(embeddings, path, n_lists=8, pq=True, m=8, n_codes=16)
     assert meta["pq"] and meta["m"] == 8
-    q = embeddings.filter(F.col("vec_id") < 3)
-    got = search_ivf_index(spark, path, q, k=10, n_probe=2, rerank=8)
-    exp = ivf_pq_topk(embeddings, q, k=10, n_lists=8, n_probe=2, rerank=8)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.collect()))
+    for q, n_probe, rerank in (
+        (embeddings.filter(F.col("vec_id") < 3), 2, 8),
+        (embeddings.filter(F.col("vec_id").between(100, 119)), 3, 4),
+    ):
+        got = search_ivf_index(spark, path, q, k=10, n_probe=n_probe, rerank=rerank)
+        exp = ivf_pq_topk(
+            embeddings, q, k=10, n_lists=8, n_probe=n_probe, rerank=rerank
+        )
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, exp.collect()))
 
 
 def test_probe_prunes_partitions_at_file_level(spark, embeddings, tmp_path):

@@ -189,16 +189,12 @@ def test_resolve_dup_clusters_distributed_path_matches_driver_path(spark):
 
 def test_two_phase_star_logarithmic_rounds_on_chain(spark):
     """The r11 scale fix: a planted near-dup CHAIN (diameter = n) must
-    resolve in O(log n) rounds — the superseded min-label loop needs
-    O(n) rounds on this shape and raises at its default budget, while
-    large-star/small-star converges in ~log2(n) and stays row-identical
-    to the driver union-find."""
+    resolve in O(log n) rounds — per-round min-label propagation would
+    need O(n) rounds on this shape, while large-star/small-star converges
+    in ~log2(n) and stays row-identical to the driver union-find."""
     import math
 
-    import pytest
-
     from real_time_financial_data_pipeline_spark.operators.dedup import (
-        _resolve_min_label,
         resolve_dup_clusters,
     )
 
@@ -216,19 +212,14 @@ def test_two_phase_star_logarithmic_rounds_on_chain(spark):
     # round); 2*log2 is a generous envelope that still excludes any
     # linear-in-diameter behavior (which would need ~n rounds)
     assert 1 <= stats["rounds"] <= 2 * math.ceil(math.log2(n))
-    # the baseline resolver really is linear on this shape: its default
-    # 20-round budget cannot cover diameter 255
-    with pytest.raises(RuntimeError, match="did not converge"):
-        _resolve_min_label(chain)
 
 
 def test_two_phase_star_matches_min_label_on_adversarial_shapes(spark):
-    """Row-identical components across both distributed resolvers and the
-    driver union-find on the shapes that stress them differently: a hub
-    star (hot node), a cycle, a binary tree, and a dense clique glued to
-    a chain."""
+    """Row-identical components from the distributed two-phase star
+    resolver and the driver union-find on the shapes that stress them
+    differently: a hub star (hot node), a cycle, a binary tree, and a
+    dense clique glued to a chain."""
     from real_time_financial_data_pipeline_spark.operators.dedup import (
-        _resolve_min_label,
         resolve_dup_clusters,
     )
 
@@ -247,10 +238,7 @@ def test_two_phase_star_matches_min_label_on_adversarial_shapes(spark):
         r.doc_id: r.canonical_id
         for r in resolve_dup_clusters(pairs, driver_threshold=0).collect()
     }
-    via_min_label = {
-        r.doc_id: r.canonical_id for r in _resolve_min_label(pairs).collect()
-    }
-    assert via_driver == via_star == via_min_label
+    assert via_driver == via_star
     # sanity on the expected components
     assert via_star[129] == 100 and via_star[211] == 200
     assert via_star[330] == 300 and via_star[502] == 400
@@ -450,6 +438,30 @@ def test_ivf_topk_finds_planted_near_duplicate(spark):
     assert top1[1] == 17  # the planted near-dup shares the list and wins rank 1
 
 
+def test_zero_norm_row_leaves_ivf_results_unchanged(spark, embeddings):
+    """One all-zeros embedding used to reach the quantizer fits: its NaN
+    normalisation made a NaN centroid that took every vector's list and
+    was never probed, so IVF returned nothing.  Zero-norm rows are left
+    out of the training sample, so adding one changes no result (the row
+    itself has no cosine and never outranks a scored neighbour)."""
+    from real_time_financial_data_pipeline_spark.operators.similarity import (
+        ivf_pq_topk,
+        ivf_topk,
+    )
+
+    base = embeddings.select("vec_id", "embedding")
+    dim = len(base.first().embedding)
+    zero = spark.createDataFrame(
+        [(1_000_000, [0.0] * dim)], "vec_id long, embedding array<float>"
+    )
+    q = base.filter(F.col("vec_id") < 5)
+    for search in (ivf_topk, ivf_pq_topk):
+        exp = sorted(map(tuple, search(base, q, k=10, n_lists=8, n_probe=2).collect()))
+        assert len(exp) == 50, search.__name__
+        got = search(base.union(zero), q, k=10, n_lists=8, n_probe=2).collect()
+        assert sorted(map(tuple, got)) == exp, search.__name__
+
+
 def test_ivf_pq_full_probe_full_rerank_equals_exact(embeddings):
     """n_probe == n_lists and a rerank pool covering every candidate
     recovers the exact brute-force top-k: the PQ/ADC stage then only
@@ -607,10 +619,8 @@ def test_cc_resolvers_release_superseded_checkpoints(spark):
     each superseded round's blocks instead of ratcheting them until JVM
     GC kills a long nightly session.  Pinned structurally: the number
     of persistent RDDs a resolution leaves behind must not grow with
-    the round count (chain length drives rounds for two-phase star;
-    both resolvers checked)."""
+    the round count (chain length drives rounds for two-phase star)."""
     from real_time_financial_data_pipeline_spark.operators.dedup import (
-        _resolve_min_label,
         _resolve_two_phase_star,
     )
 
@@ -624,20 +634,13 @@ def test_cc_resolvers_release_superseded_checkpoints(spark):
             [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
         )
 
-    # chain sizes per resolver: min-label is O(diameter) with a 20-round
-    # budget (the chain is its documented pathology), so it gets 8/16;
-    # two-phase star is O(log n) and gets 8/64
-    for resolver, sizes in (
-        (_resolve_two_phase_star, (8, 64)),
-        (_resolve_min_label, (8, 16)),
-    ):
-        for n in sizes:  # the larger chain needs strictly more rounds
-            before = n_persistent()
-            resolver(chain(n)).count()
-            residue = n_persistent() - before
-            # a BOUND, not equality: Spark's ContextCleaner may reclaim
-            # earlier runs' unreferenced leftovers between measurements
-            # (async), which can only LOWER a count — while the ratchet
-            # this pins would leave ~one checkpoint per round (7+ on the
-            # 64-chain), far above the final-state bound
-            assert residue <= 3, (resolver.__name__, n, residue)
+    for n in (8, 64):  # the larger chain needs strictly more rounds
+        before = n_persistent()
+        _resolve_two_phase_star(chain(n)).count()
+        residue = n_persistent() - before
+        # a BOUND, not equality: Spark's ContextCleaner may reclaim
+        # earlier runs' unreferenced leftovers between measurements
+        # (async), which can only LOWER a count — while the ratchet
+        # this pins would leave ~one checkpoint per round (7+ on the
+        # 64-chain), far above the final-state bound
+        assert residue <= 3, (n, residue)

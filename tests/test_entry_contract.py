@@ -28,6 +28,19 @@ def test_every_query_has_an_oracle():
     assert len(qs) == 50
 
 
+def test_staged_paths_live_in_the_checkout():
+    """Staged-oracle tables land under the checkout that runs them, so a
+    second checkout never writes (or reads) another one's staging.  The
+    oracle SQL reads the same constants."""
+    from pathlib import Path
+
+    root = Path(entrymod.__file__).resolve().parent
+    staged = {k: v for k, v in vars(entrymod).items() if k.startswith("_STAGED_")}
+    assert "_STAGED_IVFPQ_DIR" in staged
+    for name, path in staged.items():
+        assert Path(path).resolve().is_relative_to(root), (name, path)
+
+
 @pytest.mark.parametrize("name", sorted(entrymod.queries()))
 def test_each_query_runs_at_smallest_sf(spark, name):
     df = entrymod.queries()[name](spark, SF)

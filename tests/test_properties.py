@@ -226,8 +226,8 @@ _edges = st.lists(
 @given(edges=_edges)
 @_settings
 def test_resolve_dup_clusters_any_graph_matches_union_find(spark, edges):
-    """Both execution paths (driver union-find and distributed min-label
-    propagation) must produce min-of-component labels for ANY pair graph,
+    """Both execution paths (driver union-find and distributed two-phase
+    star contraction) must produce min-of-component labels for ANY pair graph,
     including cycles, chains and self-contained cliques."""
     from real_time_financial_data_pipeline_spark.operators.dedup import resolve_dup_clusters
 

@@ -6,8 +6,9 @@ of the whole ladder.  Vocabulary and domain count held constant (the
 vocabulary bounded, so 10x links should cost ~1x fold wall beyond the
 scan).  Recorded (idle host): 1M links 13.85 s, 10M links 13.26 s =
 0.96x, snapshot 860 rows both."""
-import shutil, sys, time
-sys.path.insert(0, "/root/repo")
+import os, shutil, sys, time
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import functions as F
 from real_time_financial_data_pipeline_spark.session import get_spark
 from real_time_financial_data_pipeline_spark.streaming.crawl_graph import (

@@ -23,13 +23,15 @@ defensive runtime confs are what make that hold.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from real_time_financial_data_pipeline_spark.catalog import TABLES
 from real_time_financial_data_pipeline_spark.session import get_spark

@@ -15,9 +15,11 @@ Usage: python tools/plan_audit.py [sf_dir]
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from real_time_financial_data_pipeline_spark.session import get_spark
 

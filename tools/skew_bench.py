@@ -23,7 +23,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -220,14 +221,12 @@ def main() -> None:
     cold_docs.unpersist()
 
     # --- dup-cluster resolution: chain diameter vs round count ----------
-    # The r11 scale fix: an adversarial near-dup CHAIN (A~B~C~..., the
-    # shape shingled boilerplate corpora actually produce) has diameter n,
-    # so the per-round min-label resolver needs O(n) Spark jobs; the
+    # An adversarial near-dup CHAIN (A~B~C~..., the shape shingled
+    # boilerplate corpora actually produce) has diameter n, so per-round
+    # min-label propagation would need O(n) Spark jobs; the
     # large-star/small-star two-phase resolver is O(log n) rounds on any
-    # shape.  Planted 4k chain + a 4k random blob graph (short diameter —
-    # min-label's best case) for both resolvers.
+    # shape.  Planted 4k chain, a 4k random blob graph and a hub forest.
     from real_time_financial_data_pipeline_spark.operators.dedup import (
-        _resolve_min_label,
         resolve_dup_clusters,
     )
 
@@ -236,8 +235,7 @@ def main() -> None:
         [(i, i + 1) for i in range(n_chain - 1)], "id_a long, id_b long"
     ).persist()
     # "blob": a congruential pseudo-random sparse graph — looks benign,
-    # but its min-distance-from-root structure ALSO defeats the linear
-    # resolver (measured: 213 labels still moving at round 20, 44 at 100)
+    # but its min-distance-from-root structure has a long diameter too
     rng_edges = [
         ((7919 * i) % n_chain, (104729 * i + 13) % n_chain) for i in range(n_chain)
     ]
@@ -245,8 +243,8 @@ def main() -> None:
         [(min(a, b), max(a, b)) for a, b in rng_edges if a != b],
         "id_a long, id_b long",
     ).persist()
-    # "hub": every node at distance <= 2 from one of 64 hubs — the
-    # min-label resolver's best case, its fair wall-time comparison
+    # "hub": every node at distance <= 2 from one of 64 hubs (already
+    # nearly converged: the resolver's fixed per-call overhead)
     hub = spark.createDataFrame(
         [(i, (7919 * i) % 64) for i in range(64, n_chain)],
         "id_a long, id_b long",
@@ -265,21 +263,6 @@ def main() -> None:
     results["cc_star_blob"] = median_of(lambda: run_star(blob, stats_blob), runs=1)
     results["cc_star_hub"] = median_of(lambda: run_star(hub, stats_hub), runs=1)
 
-    def min_label_timing(pairs, max_rounds):
-        # -1.0 = did not converge within the budget; the failure IS the
-        # datapoint (the linear-rounds resolver cannot do this shape)
-        t0 = time.perf_counter()
-        try:
-            _resolve_min_label(pairs, max_rounds=max_rounds).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            return round(time.perf_counter() - t0, 3)
-        except RuntimeError:
-            return -1.0
-
-    results["cc_min_label_chain"] = min_label_timing(chain, 20)
-    results["cc_min_label_blob"] = min_label_timing(blob, 100)
-    results["cc_min_label_hub"] = min_label_timing(hub, 20)
     cc_rounds = {
         "chain_nodes": n_chain,
         "star_rounds_chain": stats_chain.get("rounds"),

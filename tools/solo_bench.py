@@ -10,10 +10,12 @@ Usage: python tools/solo_bench.py <query> [runs=6] [sf_dir=/root/testdata/sf0.1]
 from __future__ import annotations
 
 import statistics
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from real_time_financial_data_pipeline_spark.session import get_spark
 
