@@ -17,7 +17,8 @@ from __future__ import annotations
 
 import math
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -92,6 +93,24 @@ SF0001 = "/root/testdata/sf0.001"
 _STAGED_ROOT = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "spark-warehouse", "staged"
 )
+
+
+@contextmanager
+def _narrow_shuffle(spark: SparkSession) -> Iterator[None]:
+    """Run the block with ``spark.sql.shuffle.partitions`` at most 8,
+    then restore it.  Eager loops over small aggregates and the state
+    stores of short streams pay per partition, not per row: under a
+    vanilla session's 200 partitions that is mostly empty tasks and
+    store commits.  The width only ever narrows, so a session already
+    sized to its cores keeps its own.  A stream started inside records
+    the width in its fresh checkpoint; results do not depend on it."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key, "200")
+    spark.conf.set(key, str(min(int(old), 8)))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -260,12 +279,15 @@ def _pipeline_gold_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         dest_name=f"events_gold_daily_{sf_tag}",
     )
     gold = lake.read(f"events_gold_daily_{sf_tag}", "gold")
+    # the mean's last bits follow the summation order, which follows the
+    # shuffle width; snapping to 9 dp first keeps a mean on a 6-dp half
+    # boundary from flipping (the oracle rounds the same way)
     return timestamps_to_iso(
         sanitize_floats(
             gold.select(
                 "period",
                 "event_type",
-                F.round("value", 6).alias("avg_value"),
+                F.round(F.round("value", 9), 6).alias("avg_value"),
                 F.col("event_id").alias("n_events"),
             )
         )
@@ -677,18 +699,9 @@ def _lang_id_trained_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iters=6: the oracle checks the SCORING replay, not weight
     # optimality (the quality_classifier_docs doctrine) — every
     # iteration is two jobs, and six already yields a non-degenerate
-    # boundary on the lang labels.  The training loop and staging
-    # writes run EAGERLY here, and each iteration's gradient aggregate
-    # is n_buckets-row bounded — under the driver's vanilla session its
-    # 200-partition shuffles are empty-task scheduling (measured 38.6 s
-    # of gate wall), so pin a modest width for the eager phase and
-    # restore (the fold-ladder convention).  Gate-safe by construction:
-    # the oracle replays SCORING from the staged weights, and the Spark
-    # side scores from the same staged table, so both sides see
-    # identical weights whatever width trained them.
-    old = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # boundary on the lang labels.  Gate-safe whatever width trains:
+    # the oracle and the Spark side both score from the staged weights.
+    with _narrow_shuffle(spark):
         weights = train_multiclass_hashed(
             docs, label_col="lang", text_col="text",
             n_buckets=_MC_N_BUCKETS, iters=6,
@@ -698,8 +711,6 @@ def _lang_id_trained_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             hashed_ngram_buckets(F.col("text"), _MC_N_BUCKETS, 2).alias("bks"),
         ).coalesce(1).write.mode("overwrite").parquet(_STAGED_MC_BK_DIR)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     classes, biases, dense, n_buckets, ngram = _multiclass_weights(staged_w)
     scored = lang_id_trained(docs, staged_w, out_col="pred")
     # per-class logit columns via ONE named fold column (the r16
@@ -1566,17 +1577,12 @@ def _stream_graph_fold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_slice", a % 3
     )
     fold = make_graph_folder(_STAGED_GRAPH_FOLD_DIR, keep_versions=2)
-    # pin the eager fold loop's shuffle width (see _stream_anchor_fold_docs)
-    old = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _narrow_shuffle(spark):
         for batch_id in (1, 2, 3, 3):  # the second 3 IS the replay
             fold(
                 links.filter(F.col("_slice") == batch_id - 1).drop("_slice"),
                 batch_id,
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     version, snapshot = latest_graph_snapshot(spark, _STAGED_GRAPH_FOLD_DIR)
     assert version == 3, f"fold ladder ended at v={version}, expected 3"
     return snapshot.select("src_domain", "dst_domain", "weight")
@@ -1634,21 +1640,13 @@ def _stream_anchor_fold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (a % 3).alias("_slice"),
     )
     fold = make_anchor_counts_folder(_STAGED_ANCHOR_FOLD_DIR, keep_versions=2)
-    # the ladder's per-batch count/merge aggregates run EAGERLY here; on a
-    # vanilla session their shuffles default to 200 partitions of near-empty
-    # tasks — pin a modest count for the fold loop and restore (the
-    # stream_purchase_click_join convention; values are partition-count
-    # independent, test-pinned by the fold≡direct identity)
-    old = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # values are partition-count independent (the fold≡direct identity test)
+    with _narrow_shuffle(spark):
         for batch_id in (1, 2, 3, 3):  # the second 3 IS the replay
             fold(
                 links.filter(F.col("_slice") == batch_id - 1).drop("_slice"),
                 batch_id,
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     latest = latest_snapshot(spark, _STAGED_ANCHOR_FOLD_DIR)
     assert latest is not None and latest[0] == 3, f"fold ladder: {latest}"
     return profile_from_counts(latest[1], k=1000)
@@ -2186,15 +2184,12 @@ def _stream_tumbling_daily_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Second hygiene change (r16): the stream's shuffle partitions — which
     size the STATE STORE, one HDFSBackedStateStore instance + per-batch
-    commit file per partition — are pinned to 8 for the drain instead of
-    the session's batch default (32).  The aggregate emits ~150 rows at
-    sf0.1; 32 state stores is pure fixed overhead at that cardinality
-    (measured: 32 parts 1.78-2.91 s vs 8 parts 1.17 s median, idle host).
+    commit file per partition — are capped at 8 for the drain
+    (``_narrow_shuffle``).  The aggregate emits ~150 rows at sf0.1; 32
+    state stores is pure fixed overhead at that cardinality (measured at
+    local[32]: 32 parts 1.78-2.91 s vs 8 parts 1.17 s median, idle host).
     At production scale the state partition count must track keys x open
-    windows, not the batch shuffle default — this pin is that sizing rule
-    applied at sf0.1, not a local[32] hack.  Conf is restored after the
-    drain (checkpointed streams bake the partition count at first start,
-    so the fresh-checkpoint-per-run contract makes the pin safe)."""
+    windows, not the batch shuffle default."""
     import shutil
 
     _STREAM_SEQ[0] += 1
@@ -2207,9 +2202,7 @@ def _stream_tumbling_daily_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(ck, ignore_errors=True)
     os.makedirs(ck, exist_ok=True)
     agg = tumbling_ohlc(_events_stream(spark, sf_dir))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with _narrow_shuffle(spark):
         q = (
             agg.writeStream.format("memory")
             .queryName(name)
@@ -2219,8 +2212,6 @@ def _stream_tumbling_daily_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.table(name)
 
 
@@ -2303,14 +2294,9 @@ def _stream_purchase_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("p_user").alias("user_id"), "purchase_id", "p_ts", "click_id", "c_ts"
     )
-    # each state partition costs 4 state-store instances for a stream-stream
-    # join (2 sides × key/value stores); at this backlog size a vanilla
-    # session's 200 shuffle partitions would spend more time opening stores
-    # than joining.  Pin a modest count for THIS query and restore (the
-    # partition count is baked into the new query's checkpoint only).
-    old = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # a stream-stream join keeps 4 state stores per partition (2 sides ×
+    # key/value)
+    with _narrow_shuffle(spark):
         q = (
             joined.writeStream.format("memory")
             .queryName(name)
@@ -2319,8 +2305,6 @@ def _stream_purchase_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(name)
 
 
@@ -3610,7 +3594,7 @@ def oracle_sql() -> dict[str, str]:
         SELECT strftime(CAST(date_trunc('day', ts) AS TIMESTAMP),
                         '%Y-%m-%dT%H:%M:%S.%f') || 'Z' AS period,
                event_type,
-               round(avg(value), 6) AS avg_value,
+               round(round(avg(value), 9), 6) AS avg_value,
                count(event_id) AS n_events
         FROM cleaned GROUP BY 1, 2
     """

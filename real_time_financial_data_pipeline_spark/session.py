@@ -12,8 +12,8 @@ Semantics pinned for reference parity (SURVEY.md §4):
 - AQE on (coalesce + skew-join): at 100 TB the runtime re-plan is what keeps
   shuffle partition counts and skewed keys sane; free at small SF.
 
-Scale defaults are environment-driven so the same code runs on ``local[32]``
-here and on a real cluster unchanged.
+Scale defaults are environment-driven (``get_spark``: the host's cores) so
+the same code runs on a laptop, a 32-core box and a real cluster unchanged.
 """
 
 from __future__ import annotations
@@ -75,18 +75,29 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
-    ``shuffle_partitions`` defaults to the core count — right-sized for local
-    runs; on a cluster pass the usual 2-3× total-cores figure or let AQE
-    coalesce from a higher initial number.
+    One width rule: ``cpus`` is ``$SPARK_GRAFT_CPUS`` when set, else the
+    number of cores this process may run on (``os.sched_getaffinity``).
+    ``master`` defaults to ``local[cpus]`` and ``shuffle_partitions`` to
+    ``cpus``, so one wave of tasks covers a shuffle; AQE coalesces batch
+    shuffle output from there.  On a cluster pass the usual 2-3×
+    total-cores figure, or a higher one for AQE to coalesce.
+
+    The width also sizes streaming state: a stateful operator (watermark
+    dedup, windowed aggregates, stream-stream joins) keeps one state store
+    per shuffle partition, and each micro-batch commits every store.  A
+    query records the width in its checkpoint when it first starts, and a
+    restart from that checkpoint keeps it whatever the session says, so
+    the width here only decides it for new checkpoints.
+
     ``state_store='rocksdb'`` opts the streaming state store into the
     RocksDB provider (see :func:`state_store_conf`) — pass it on sessions
     running the stateful streaming family at high key cardinality.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    cpus = int(env) if env else len(os.sched_getaffinity(0))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else max(8, int(cpus))
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -106,7 +106,12 @@ def dedup_stream(
     """Streaming ingest dedup: drop re-deliveries of the same key within the
     watermark horizon (``dropDuplicatesWithinWatermark``).  State is bounded
     by the watermark — the at-scale answer to at-least-once sources
-    re-sending events."""
+    re-sending events.
+
+    The state lives in one store per shuffle partition, and every
+    micro-batch commits each store, so the session's width (see
+    ``session.get_spark``) sets the per-batch cost.  The query records that
+    width in its checkpoint at first start; a restart keeps it."""
     return stream.withWatermark(time_col, watermark).dropDuplicatesWithinWatermark(key_cols)
 
 

@@ -3,11 +3,14 @@ queries() entry returns a DataFrame at sf0.001; oracle keys are a subset."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 import __spark_entry__ as entrymod
 
 SF = "/root/testdata/sf0.001"
+SF01 = os.path.join(os.path.dirname(SF), "sf0.01")
 
 
 def test_entry_returns_rows(spark):
@@ -495,3 +498,36 @@ def test_chunk_docs_duckdb_oracle(spark):
         ).fetchall()
     }
     assert got == want and len(got) > 0
+
+
+def test_narrow_shuffle_only_narrows(spark):
+    """The eager-phase pin caps the width at 8 and restores it: a vanilla
+    session's 200 and a 32-core session's 32 run at 8; a narrower session
+    keeps its own width."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        for width, inside in (("200", "8"), ("32", "8"), ("4", "4")):
+            spark.conf.set(key, width)
+            with entrymod._narrow_shuffle(spark):
+                assert spark.conf.get(key) == inside
+            assert spark.conf.get(key) == width
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_pipeline_gold_daily_does_not_depend_on_shuffle_width(spark):
+    """The gold mean's last bits follow the summation order, which follows
+    the shuffle width; at sf0.01 one daily mean sits on a 6-dp half
+    boundary.  The served column is the same at width 4 and width 8."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    served = {}
+    try:
+        for width in (4, 8):
+            spark.conf.set(key, str(width))
+            rows = entrymod.queries()["pipeline_gold_daily"](spark, SF01).collect()
+            served[width] = sorted((r.period, r.event_type, r.avg_value) for r in rows)
+    finally:
+        spark.conf.set(key, old)
+    assert served[4] == served[8] and len(served[4]) > 0

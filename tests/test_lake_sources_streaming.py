@@ -432,6 +432,52 @@ def test_exactly_once_sink_replay_idempotent(spark, tmp_path):
     assert sorted(r.id for r in out.collect()) == [1, 2, 3]
 
 
+def test_resumed_dedup_stream_keeps_its_checkpoint_width(spark, tmp_path):
+    """A stateful stream records its shuffle width (its number of state
+    stores) in the checkpoint at first start.  An ingest begun at width 8
+    and resumed in a session at width 4 still runs 8 stores, and its dedup
+    state still drops a re-delivery: the upgrade path for checkpoints made
+    before the session width followed the core count."""
+    import datetime as dt
+
+    from real_time_financial_data_pipeline_spark.streaming.ingest import (
+        dedup_stream,
+        file_stream,
+        ingest_to_bronze,
+    )
+
+    schema = spark.createDataFrame([], "id long, ts timestamp").schema
+    src, bronze, ckpt = (str(tmp_path / d) for d in ("src", "bronze", "ckpt"))
+    base = dt.datetime(2024, 1, 2, 9, 30)
+
+    def drop(ids):
+        rows = [(i, base + dt.timedelta(seconds=i)) for i in ids]
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
+
+    def drain(width):
+        key = "spark.sql.shuffle.partitions"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(width))
+        try:
+            q = ingest_to_bronze(
+                dedup_stream(file_stream(spark, src, schema), ["id"]),
+                bronze, ckpt, trigger_available_now=True, exactly_once=True,
+            )
+            q.awaitTermination(120)
+        finally:
+            spark.conf.set(key, old)
+        assert q.exception() is None
+        return q.lastProgress
+
+    drop(range(10))
+    assert drain(8)["stateOperators"][0]["numShufflePartitions"] == 8
+    drop(range(5, 15))  # ids 5..9 are re-deliveries inside the watermark
+    progress = drain(4)
+    assert progress["stateOperators"][0]["numShufflePartitions"] == 8
+    ids = [r.id for r in spark.read.parquet(bronze).collect()]
+    assert sorted(ids) == list(range(15))
+
+
 def test_stream_interval_join_matches_batch(spark, tmp_path):
     """Stream-stream interval join on planted data == the batch interval
     join, and pairs outside the lookback window are excluded."""
